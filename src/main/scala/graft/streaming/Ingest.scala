@@ -2,10 +2,11 @@ package graft.streaming
 
 import graft.functions.{Conversions, ModbusDecode}
 import graft.ops.Maintenance
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, LongType}
 
 /** The reference daemon's acquire -> decode -> convert -> persist
   * dataflow (SURVEY.md §3) as ONE Structured Streaming pipeline.
@@ -63,12 +64,16 @@ object Ingest {
       .select(
         format_string("CHL: %d", col("channel_id")).as("parameter"),
         lit(1).as("status"), col("ts"))
-    if (heartbeat)
-      chl.unionByName(batch.select(
-          lit("daq-3i").as("parameter"), lit(1).as("status"), max(col("ts")).as("ts"))
-        .filter(col("ts").isNotNull)) // empty batch: no null-ts heartbeat
+    if (heartbeat) chl.unionByName(heartbeatUpdate(batch, col("ts")))
     else chl
   }
+
+  /** The D10 liveness row `("daq-3i", 1)` stamped with the newest `ts`
+    * of `df` — one lazy aggregate, no driver round trip; no row when
+    * `df` is empty (never a null-ts heartbeat). */
+  private def heartbeatUpdate(df: DataFrame, ts: Column): DataFrame =
+    df.select(lit("daq-3i").as("parameter"), lit(1).as("status"), max(ts).as("ts"))
+      .filter(col("ts").isNotNull)
 
   /** Serializes read-merge-overwrite cycles on a status table: two
     * streams (ingest + heartbeat) may upsert the SAME statusDir from
@@ -79,46 +84,26 @@ object Ingest {
     * a transactional store via the same foreachBatch MERGE). */
   private val statusLock = new Object
 
-  /** Deterministic dense id assignment in `parameter` order, fully
-    * distributed: `repartitionByRange` orders partitions by parameter,
-    * a per-partition sort orders rows within them, and
-    * `RDD.zipWithIndex` turns that global order into a dense 0-based
-    * index with ONE extra count job (it is exactly the two-phase
-    * prefix sum — per-partition sizes, then offset per partition) —
-    * no driver materialization, no single-partition global window.
-    * Where range-partition bounds fall cannot change the ids: bounds
-    * move rows between partitions but never reorder the global
-    * parameter sequence the index enumerates. Row i gets
-    * `startId + 1 + i`. */
-  private def withAssignedIds(df: DataFrame, startId: Long): DataFrame = {
-    val spark = df.sparkSession
-    val schema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType,
-        nullable = false) +: df.schema.fields.toSeq)
-    val ranged = df.repartitionByRange(col("parameter"))
-      .sortWithinPartitions("parameter")
-    val rdd = ranged.rdd.zipWithIndex().map { case (r, i) =>
-      Row.fromSeq((startId + 1 + i) +: r.toSeq)
-    }
-    spark.createDataFrame(rdd, schema)
-  }
-
-  /** Merge status updates into the keyed status table on disk — every
-    * stage distributed (the table is bounded by parameter count ≈
+  /** Merge status updates into the keyed status table on disk as ONE
+    * distributed plan (the table is bounded by parameter count ≈
     * channel count, db_model.py:57-62, but a 10M-channel deployment
-    * must not funnel it through the driver; the only driver-side
-    * values are the 1-row max-id probe and the swap renames). The
-    * merged table is computed lazily OVER the directory it replaces,
-    * so the write lands aside and installs via the same two-rename +
-    * .bak swap as [[compactFact]] — the data is never deleted before
-    * its replacement is in place, and a swap that dies between
-    * renames is restored at the next merge's entry probe.
+    * must not funnel it through the driver; the only driver-side work
+    * is the existence probes and the swap renames). The directory is
+    * listed once; table and updates are unioned and ranked in one
+    * `parameter` window that carries each parameter's existing id and
+    * keeps its latest row. The merged table is computed lazily OVER
+    * the directory it replaces, so the write lands aside and installs
+    * via the same two-rename + .bak swap as [[compactFact]] — the data
+    * is never deleted before its replacement is in place, and a swap
+    * that dies between renames is restored at the next merge's entry
+    * probe.
     *
     * The persisted table carries the reference's surrogate `id`
     * (db_model.py:58 autoincrement PK): a parameter keeps its id
-    * across upserts; parameters seen for the first time take the next
-    * ids in parameter order ([[withAssignedIds]]), which makes
-    * replays deterministic. */
+    * across upserts; rows without one — parameters seen for the first
+    * time, and the rows of an id-less legacy table — take the next
+    * dense ids after the current max, legacy rows first, each group in
+    * parameter order, which makes replays deterministic. */
   def mergeStatus(spark: SparkSession, statusDir: String, updates: DataFrame): Unit = statusLock.synchronized {
     // First-run absence is the ONLY condition that substitutes an empty
     // current table — probed explicitly, so a genuine read failure
@@ -132,45 +117,39 @@ object Ingest {
     // recover a swap that died between its two renames (data under
     // .bak, no statusDir) — same protocol as recoverFactDir
     if (!fs.exists(statusPath) && fs.exists(bak)) { fs.rename(bak, statusPath); () }
-    val withIdSchema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType,
-        nullable = false) +: updates.schema.fields.toSeq)
-    val currentFull =
+    val noId = lit(null).cast(LongType).as("id")
+    val current =
       if (fs.exists(statusPath)) {
-        // probe the on-disk schema: a statusDir written by an id-less
-        // engine version would read null ids through the non-nullable
-        // schema (getLong unboxes null to 0 — every legacy parameter
-        // would silently share id 0). Backfill deterministically in
-        // parameter order instead, mirroring first-run id assignment.
-        if (spark.read.parquet(statusDir).schema.fieldNames.contains("id"))
-          spark.read.schema(withIdSchema).parquet(statusDir)
-        else withAssignedIds(
-          spark.read.schema(updates.schema).parquet(statusDir), 0L)
+        // a statusDir written by an id-less engine version reads null
+        // ids, backfilled below like new parameters
+        val onDisk = spark.read.parquet(statusDir)
+        if (onDisk.columns.contains("id")) onDisk else onDisk.select(col("*"), noId)
       }
-      else spark.createDataFrame(java.util.Collections.emptyList[Row](), withIdSchema)
+      else updates.limit(0).select(col("*"), noId)
+    val maxId = current.select(coalesce(max(col("id")), lit(0L))).scalar()
+    val dataCols = updates.columns.toSeq.map(col)
     // tie-break equal timestamps in favor of the incoming update so a
     // same-second replay/recompute resolves deterministically
-    val merged = Maintenance.upsert(
-        currentFull.drop("id").withColumn("__src", lit(0)),
-        updates.withColumn("__src", lit(1)),
-        Seq("parameter"), Seq(col("ts"), col("__src")))
-      .drop("__src")
-    val dataCols = updates.schema.fieldNames.toSeq
-    val outCols = (col("id") +: dataCols.map(col)): Seq[org.apache.spark.sql.Column]
-    val curIds = currentFull.select(col("parameter"), col("id"))
-    // the one driver-side scalar: the current max id (column-pruned
-    // 1-row aggregate, never the table)
-    val maxId = currentFull.agg(coalesce(max(col("id")), lit(0L)))
-      .head().getLong(0)
-    val kept = merged.join(curIds, Seq("parameter")).select(outCols: _*)
-    val fresh = withAssignedIds(
-      merged.join(curIds, Seq("parameter"), "left_anti"), maxId)
-      .select(outCols: _*)
+    val w = Window.partitionBy(col("parameter")).orderBy(col("ts").desc, col("__src").desc)
+    val whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val latest = current.select(col("id") +: dataCols :+ lit(0).as("__src"): _*)
+      .unionByName(updates.select(noId +: dataCols :+ lit(1).as("__src"): _*))
+      .select(dataCols ++ Seq(
+        max(col("id")).over(whole).as("id"),
+        min(col("__src")).over(whole).as("__new"), // 1: not yet in the table
+        row_number().over(w).as("__rn")): _*)
+      .filter(col("__rn") === 1)
+    // bounded-global-window: only id-less rows (0-1 per steady-state
+    // merge; at most the table, which repartition(1) below writes from
+    // one task anyway)
+    val fresh = latest.filter(col("id").isNull).withColumn("id",
+      maxId + row_number().over(Window.orderBy(col("__new"), col("parameter"))))
     // single output file (repartition, not coalesce — a barrier keeps
     // the merge itself parallel): the status table is a control table
     // read whole by monitors; revisit if parameter count outgrows one
     // file
-    val out = kept.unionByName(fresh).repartition(1)
+    val out = latest.filter(col("id").isNotNull).unionByName(fresh)
+      .select(col("id") +: dataCols: _*).repartition(1)
     val tmp = statusDir + ".tmp"
     out.write.mode("overwrite").parquet(tmp)
     fs.delete(bak, true)
@@ -450,30 +429,13 @@ object Ingest {
       .writeStream
       .trigger(Trigger.ProcessingTime(periodSec * 1000L))
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val sp = batch.sparkSession
-          val ts = batch.agg(max(col("timestamp"))).head().getTimestamp(0)
-          val upd = sp.createDataFrame(
-            java.util.Arrays.asList(org.apache.spark.sql.Row("daq-3i", 1, ts)),
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("parameter",
-                org.apache.spark.sql.types.StringType),
-              org.apache.spark.sql.types.StructField("status",
-                org.apache.spark.sql.types.IntegerType),
-              org.apache.spark.sql.types.StructField("ts",
-                org.apache.spark.sql.types.TimestampType))))
-          mergeStatus(sp, statusDir, upd)
-        }
+        if (!batch.isEmpty)
+          mergeStatus(batch.sparkSession, statusDir, heartbeatUpdate(batch, col("timestamp")))
         ()
       }
       .start()
   }
 
-  /** D9 as a scheduled compaction over the fact sink: keep the newest
-    * `history_len` samples per channel (from the channel dim), writing
-    * to a swap directory then renaming — idempotent and atomic at the
-    * directory level, the scale-out form of the reference's 15 s
-    * truncate sweep (daq-3i.py:173-216). */
   /** Crash recovery for [[compactFact]]'s directory swap: a swap that
     * died between its two renames leaves the data under .bak and no
     * factDir — restore it. MUST run before anything else writes into
@@ -488,6 +450,11 @@ object Ingest {
     if (!fs.exists(dst) && fs.exists(bak)) { fs.rename(bak, dst); () }
   }
 
+  /** D9 as a scheduled compaction over the fact sink: keep the newest
+    * `history_len` samples per channel (from the channel dim), writing
+    * to a swap directory then renaming — idempotent and atomic at the
+    * directory level, the scale-out form of the reference's 15 s
+    * truncate sweep (daq-3i.py:173-216). */
   def compactFact(
       spark: SparkSession,
       factDir: String,
@@ -578,7 +545,6 @@ object Ingest {
       factDir: String,
       channels: DataFrame,
       partCol: String = "day"): Seq[String] = {
-    import org.apache.spark.sql.expressions.Window
     recoverFactPartitions(spark, factDir)
     val fact = spark.read.parquet(factDir)
     val dataCols = fact.columns.filterNot(_ == partCol).map(col).toSeq
