@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Durable index artifacts — the deployment half of the frozen-index
@@ -31,13 +32,14 @@ object IndexStore {
 
   /** Write named artifact frames under `root` (one parquet dir per
     * name). Each frame is written to a hidden temp directory and
-    * RENAMED into place — rename is atomic per frame on HDFS/posix,
-    * so a concurrently reloading job can never observe a partially
-    * written frame. Replacing an existing frame deletes the old dir
-    * first: a reader racing that exact window can see the frame
-    * briefly missing (never partial) — deployments that need fully
-    * lock-free replacement should version `root` per save and flip a
-    * pointer.
+    * installed by [[Maintenance.swapDir]] — rename is atomic per frame
+    * on HDFS/posix, so a concurrently reloading job can never observe
+    * a partially written frame. The old frame moves aside to
+    * `.name.bak` until its replacement is in place, so a crash never
+    * loses it (it stays there until the next save of the frame). A
+    * reader racing the two renames can see the frame briefly missing
+    * (never partial) — deployments that need fully lock-free
+    * replacement should version `root` per save and flip a pointer.
     *
     * Concurrency contract: ONE writer per (root, name) at a time.
     * The pre-write sweep below deletes every orphaned `.name.tmp-*`
@@ -61,11 +63,9 @@ object IndexStore {
     Par.all(frames.map { case (name, df) => () => saveOne(root, name, df) }: _*)
 
   private def saveOne(root: String, name: String, df: DataFrame): Unit = {
-    val dst = new org.apache.hadoop.fs.Path(s"$root/$name")
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"$root/.$name.tmp-${java.util.UUID.randomUUID()}")
-    val fs = dst.getFileSystem(
-      df.sparkSession.sessionState.newHadoopConf())
+    val dst = new Path(s"$root/$name")
+    val tmp = new Path(s"$root/.$name.tmp-${java.util.UUID.randomUUID()}")
+    val fs = dst.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
     // Sweep temp dirs orphaned by earlier failed writes of this frame,
     // then guarantee our own temp dir never outlives the attempt.
     // Best-effort: a sibling frame's concurrent rename can make a
@@ -79,10 +79,7 @@ object IndexStore {
     } catch { case _: java.io.FileNotFoundException => () }
     try {
       df.write.mode("overwrite").parquet(tmp.toString)
-      if (fs.exists(dst)) fs.delete(dst, true)
-      if (!fs.rename(tmp, dst))
-        throw new java.io.IOException(
-          s"IndexStore.save: rename $tmp -> $dst failed")
+      Maintenance.swapDir(fs, tmp, dst, new Path(s"$root/.$name.bak"))
     } finally {
       if (fs.exists(tmp)) fs.delete(tmp, true)
     }
@@ -99,7 +96,7 @@ object IndexStore {
   def scratchRoot(s: SparkSession, prefix: String, seq: Long): String = {
     val root = s"${System.getProperty("java.io.tmpdir")}/graft_${prefix}_" +
       s"${s.sparkContext.applicationId}_$seq"
-    val p = new org.apache.hadoop.fs.Path(root)
+    val p = new Path(root)
     p.getFileSystem(s.sessionState.newHadoopConf()).deleteOnExit(p)
     root
   }
@@ -118,7 +115,7 @@ object IndexStore {
     * is untouched — compaction never retrains. Rewriting the frame IN
     * PLACE is safe because [[save]] writes to a temp dir first: the
     * source parquet is fully read (the anti-join job completes into
-    * the temp dir) before the old frame is dropped and the rename
+    * the temp dir) before the old frame moves aside and the rename
     * lands. IndexStoreSpec pins serve-after-compaction ==
     * serve-with-anti-join bit-equality. */
   def compact(s: SparkSession, root: String, name: String,

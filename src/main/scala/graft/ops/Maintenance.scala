@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -15,6 +16,9 @@ import org.apache.spark.sql.functions._
   * are. At scale, `retainNewest` is one window over data already
   * hash-partitioned by key (single shuffle, no driver involvement), and
   * `upsert` is one shuffle on the merge key with map-side combine.
+  * [[swapDir]] / [[restoreDir]] are the crash-safe directory swap that
+  * installs the on-disk forms (status table, fact compaction, index
+  * store).
   */
 object Maintenance {
 
@@ -81,4 +85,41 @@ object Maintenance {
   /** Unconditional flush (reference D8, daq_status.py:19-33): the empty
     * relation with the same schema — an overwrite sink writes zero rows. */
   def flush(df: DataFrame): DataFrame = df.limit(0)
+
+  /** Replace directory `dst` by the fully written `staged` — the
+    * parquet stand-in for the reference's transactional replace of its
+    * status and fact rows (daq_status.py:36-68, daq-3i.py:173-216).
+    * The old data is never deleted before its replacement is in place:
+    * `dst` moves aside to `bak`, `staged` renames in, then `bak` drops,
+    * so at every crash point the old data lives in exactly one of
+    * {`dst`, `bak`} and [[restoreDir]] puts it back. A `bak` next to a
+    * live `dst` is a finished swap's leftover and drops first; a `bak`
+    * WITHOUT `dst` is the old data of a swap that died between its
+    * renames and stays the rollback copy. A failed install rolls back
+    * and throws. An absent `staged` installs nothing: the old data just
+    * goes (a partition whose every row was evicted). This and
+    * [[restoreDir]] are the only renames in main source
+    * (SourceGateSpec). */
+  def swapDir(fs: FileSystem, staged: Path, dst: Path, bak: Path): Unit = {
+    if (fs.exists(dst)) {
+      fs.delete(bak, true)
+      if (!fs.rename(dst, bak)) throw new java.io.IOException(s"swapDir: cannot move $dst aside")
+    }
+    if (fs.exists(staged) && !fs.rename(staged, dst)) {
+      if (!fs.exists(dst)) restoreDir(fs, dst, bak) // roll back; a dst recreated under us keeps bak
+      throw new java.io.IOException(s"swapDir: cannot install $staged")
+    }
+    fs.delete(bak, true)
+  }
+
+  /** Crash recovery for [[swapDir]]: with `dst` missing, `bak` holds
+    * the old data of a swap that died between its renames — rename it
+    * back, throwing if that fails (a caller that went on would build
+    * its replacement without the old data, and its swap would then
+    * drop the only copy). With `dst` present, `bak` is stale — drop
+    * it. */
+  def restoreDir(fs: FileSystem, dst: Path, bak: Path): Unit =
+    if (fs.exists(dst)) fs.delete(bak, true)
+    else if (fs.exists(bak) && !fs.rename(bak, dst))
+      throw new java.io.IOException(s"restoreDir: cannot restore $bak to $dst")
 }

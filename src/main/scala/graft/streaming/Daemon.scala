@@ -111,18 +111,17 @@ class Daemon(
         // attempt of this same trigger, about to be rewritten below.
         // Serialized with the fact write by construction (same thread).
         val now = System.currentTimeMillis()
-        jdbcFactSink match {
-          case None =>
-            if (now - lastCompactMs >= truncIntervalSec * 1000L) {
-              Daemon.compactBeforePersist(spark, factDir, channels, batchId)
-              lastCompactMs = now
-            }
-            Ingest.persistBatch(batch, batchId, factDir, statusDir)
-          case Some((url, tbl)) =>
-            if (now - lastCompactMs >= truncIntervalSec * 1000L) {
+        if (now - lastCompactMs >= truncIntervalSec * 1000L) {
+          jdbcFactSink match {
+            case None => Daemon.compactBeforePersist(spark, factDir, channels, batchId)
+            case Some((url, tbl)) =>
               Daemon.compactBeforePersistJdbc(spark, url, tbl, channels, batchId)
-              lastCompactMs = now
-            }
+          }
+          lastCompactMs = now
+        }
+        jdbcFactSink match {
+          case None => Ingest.persistBatch(batch, batchId, factDir, statusDir)
+          case Some((url, tbl)) =>
             batch.persist()
             try {
               Ingest.persistBatchJdbc(batch, batchId, url, tbl) // D6

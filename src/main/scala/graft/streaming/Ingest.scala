@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.functions.{Conversions, ModbusDecode}
 import graft.ops.Maintenance
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -93,9 +94,9 @@ object Ingest {
     * `parameter` window that carries each parameter's existing id and
     * keeps its latest row. The merged table is computed lazily OVER
     * the directory it replaces, so the write lands aside and installs
-    * via the same two-rename + .bak swap as [[compactFact]] — the data
-    * is never deleted before its replacement is in place, and a swap
-    * that dies between renames is restored at the next merge's entry
+    * via [[Maintenance.swapDir]] — the data is never deleted before its
+    * replacement is in place, and a swap that dies between renames is
+    * restored ([[Maintenance.restoreDir]]) at the next merge's entry
     * probe.
     *
     * The persisted table carries the reference's surrogate `id`
@@ -111,12 +112,10 @@ object Ingest {
     // instead of silently truncating persisted status rows. The probe
     // resolves the PATH'S filesystem (statusDir may live on a scheme
     // other than fs.defaultFS).
-    val statusPath = new org.apache.hadoop.fs.Path(statusDir)
+    val statusPath = new Path(statusDir)
     val fs = statusPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bak = new org.apache.hadoop.fs.Path(statusDir + ".bak")
-    // recover a swap that died between its two renames (data under
-    // .bak, no statusDir) — same protocol as recoverFactDir
-    if (!fs.exists(statusPath) && fs.exists(bak)) { fs.rename(bak, statusPath); () }
+    val bak = new Path(statusDir + ".bak")
+    Maintenance.restoreDir(fs, statusPath, bak)
     val noId = lit(null).cast(LongType).as("id")
     val current =
       if (fs.exists(statusPath)) {
@@ -152,15 +151,7 @@ object Ingest {
       .select(col("id") +: dataCols: _*).repartition(1)
     val tmp = statusDir + ".tmp"
     out.write.mode("overwrite").parquet(tmp)
-    fs.delete(bak, true)
-    if (fs.exists(statusPath) && !fs.rename(statusPath, bak))
-      throw new java.io.IOException(s"mergeStatus: cannot move $statusPath aside")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), statusPath)) {
-      fs.rename(bak, statusPath) // roll back
-      throw new java.io.IOException(s"mergeStatus: cannot install $tmp")
-    }
-    fs.delete(bak, true)
-    ()
+    Maintenance.swapDir(fs, new Path(tmp), statusPath, bak)
   }
 
   /** Land one micro-batch: fact append + status upsert. The fact write
@@ -436,36 +427,37 @@ object Ingest {
       .start()
   }
 
-  /** Crash recovery for [[compactFact]]'s directory swap: a swap that
-    * died between its two renames leaves the data under .bak and no
-    * factDir — restore it. MUST run before anything else writes into
-    * factDir after a crash (e.g. a replayed micro-batch recreating the
-    * directory would make the .bak look stale and lose the pre-crash
-    * history), which is why [[Daemon]] calls this at startup before
-    * starting the stream. */
+  /** Crash recovery for [[compactFact]]'s directory swap
+    * ([[Maintenance.restoreDir]]): a swap that died between its two
+    * renames leaves the data under .bak and no factDir — restore it; a
+    * .bak next to a live factDir is stale — drop it. MUST run before
+    * anything else writes into factDir after a crash (e.g. a replayed
+    * micro-batch recreating the directory would make the .bak look
+    * stale and lose the pre-crash history), which is why [[Daemon]]
+    * calls this at startup before starting the stream. */
   def recoverFactDir(spark: SparkSession, factDir: String): Unit = {
-    val dst = new org.apache.hadoop.fs.Path(factDir)
-    val bak = new org.apache.hadoop.fs.Path(factDir + ".bak")
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dst) && fs.exists(bak)) { fs.rename(bak, dst); () }
+    val dst = new Path(factDir)
+    Maintenance.restoreDir(dst.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      dst, new Path(factDir + ".bak"))
   }
 
   /** D9 as a scheduled compaction over the fact sink: keep the newest
     * `history_len` samples per channel (from the channel dim), writing
-    * to a swap directory then renaming — idempotent and atomic at the
-    * directory level, the scale-out form of the reference's 15 s
-    * truncate sweep (daq-3i.py:173-216). */
+    * to a swap directory then installing it by [[Maintenance.swapDir]]
+    * — idempotent and atomic at the directory level, the scale-out form
+    * of the reference's 15 s truncate sweep (daq-3i.py:173-216). Not
+    * concurrency-safe with an ACTIVE ingest stream — run compaction
+    * between micro-batches or with the stream stopped. */
   def compactFact(
       spark: SparkSession,
       factDir: String,
       channels: DataFrame): Unit = {
     recoverFactDir(spark, factDir)
+    val dst = new Path(factDir)
+    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // nothing persisted yet (e.g. the loop's compact-before-persist on
     // a quiet stream) -> nothing to retain
-    locally {
-      val dst = new org.apache.hadoop.fs.Path(factDir)
-      if (!dst.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dst)) return
-    }
+    if (!fs.exists(dst)) return
     val fact = readFact(spark, factDir)
     // order ends with `value` so (channel_id, ts) ties resolve
     // deterministically — repeated compaction of the same factDir must
@@ -478,25 +470,7 @@ object Ingest {
     // keep the batch-partitioned layout so post-compaction micro-batches
     // (batch=bN) coexist with the compacted base
     kept.write.mode("overwrite").parquet(s"$tmp/batch=compacted")
-    // swap via a .bak hop: data is never deleted before its
-    // replacement is in place; every rename result is checked so a
-    // concurrent writer recreating the destination aborts the swap
-    // loudly (leaving .bak) instead of silently nesting directories.
-    // Not concurrency-safe with an ACTIVE ingest stream — run
-    // compaction between micro-batches or with the stream stopped.
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dst = new org.apache.hadoop.fs.Path(factDir)
-    val bak = new org.apache.hadoop.fs.Path(factDir + ".bak")
-    val fs = dst.getFileSystem(conf)
-    fs.delete(bak, true)
-    if (!fs.rename(dst, bak))
-      throw new java.io.IOException(s"compactFact: cannot move $dst aside")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)) {
-      fs.rename(bak, dst) // roll back
-      throw new java.io.IOException(s"compactFact: cannot install $tmp")
-    }
-    fs.delete(bak, true)
-    ()
+    Maintenance.swapDir(fs, new Path(tmp), dst, new Path(factDir + ".bak"))
   }
 
   /** D9 retention over a DATE-PARTITIONED fact table carrying the
@@ -530,13 +504,13 @@ object Ingest {
     * same semantics as the reference's id-ordered delete
     * (daq-3i.py:209-214). Returns the rewritten partition values.
     *
-    * Each hot partition installs via the same two-rename + .bak
-    * protocol as [[compactFact]] (never delete data before its
-    * replacement is in place): the old partition moves aside into
-    * `<factDir>.pbak/<part>=<v>` — a SIBLING of factDir, so a crash
-    * can never leave a directory that partition discovery would read
-    * as a bogus partition value — then the compacted partition renames
-    * in, then the .bak drops. [[recoverFactPartitions]] is the startup
+    * Each hot partition installs via [[Maintenance.swapDir]] like
+    * [[compactFact]] (never delete data before its replacement is in
+    * place), with its .bak at `<factDir>.pbak/<part>=<v>` — a SIBLING
+    * of factDir, so a crash can never leave a directory that partition
+    * discovery would read as a bogus partition value. A hot partition
+    * whose kept set is empty has no staged dir, so the swap just drops
+    * it (all rows were victims). [[recoverFactPartitions]] is the startup
     * sweep for the crash windows; it runs at the head of every
     * compaction pass too, so an unswept crash self-heals on the next
     * sweep even if the embedding process skips startup recovery. */
@@ -576,60 +550,37 @@ object Ingest {
     val tmp = factDir + ".compact"
     keptHot.write.mode("overwrite").partitionBy(partCol).parquet(tmp)
     cutoffs.unpersist()
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(factDir).getFileSystem(conf)
-    val bakRoot = new org.apache.hadoop.fs.Path(factDir + ".pbak")
+    val bakRoot = new Path(factDir + ".pbak")
+    val fs = bakRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(bakRoot)
-    hot.foreach { d =>
-      val dst = new org.apache.hadoop.fs.Path(s"$factDir/$partCol=$d")
-      val src = new org.apache.hadoop.fs.Path(s"$tmp/$partCol=$d")
-      val bak = new org.apache.hadoop.fs.Path(bakRoot, s"$partCol=$d")
-      // two-rename swap: the original data is ALWAYS recoverable from
-      // exactly one of {dst, bak} at every crash point
-      fs.delete(bak, true)
-      if (fs.exists(dst) && !fs.rename(dst, bak))
-        throw new java.io.IOException(s"compactFactPartitioned: cannot move $dst aside")
-      // a hot partition whose kept set is empty has no swap dir — the
-      // move-aside + bak drop IS its compaction (all rows were victims)
-      if (fs.exists(src) && !fs.rename(src, dst)) {
-        fs.rename(bak, dst) // roll back
-        throw new java.io.IOException(s"compactFactPartitioned: cannot install $src")
-      }
-      fs.delete(bak, true)
-    }
+    hot.foreach(d => Maintenance.swapDir(fs, new Path(s"$tmp/$partCol=$d"),
+      new Path(s"$factDir/$partCol=$d"), new Path(bakRoot, s"$partCol=$d")))
     fs.delete(bakRoot, true)
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+    fs.delete(new Path(tmp), true)
     hot
   }
 
   /** Crash recovery for [[compactFactPartitioned]]'s per-partition
-    * swaps — the partitioned twin of [[recoverFactDir]]. A swap that
-    * died between its two renames leaves the partition's data under
-    * `<factDir>.pbak/` and no destination — restore it; a .bak whose
-    * destination EXISTS is a completed swap's leftover — drop it. Like
-    * recoverFactDir, run this before anything else writes the layout
-    * after a crash; every compaction pass also runs it first. */
+    * swaps — the partitioned twin of [[recoverFactDir]]:
+    * [[Maintenance.restoreDir]] over every entry of `<factDir>.pbak/`.
+    * Like recoverFactDir, run this before anything else writes the
+    * layout after a crash; every compaction pass also runs it first. */
   def recoverFactPartitions(spark: SparkSession, factDir: String): Unit = {
-    val bakRoot = new org.apache.hadoop.fs.Path(factDir + ".pbak")
+    val bakRoot = new Path(factDir + ".pbak")
     val fs = bakRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(bakRoot)) {
-      fs.listStatus(bakRoot).foreach { st =>
-        val dst = new org.apache.hadoop.fs.Path(factDir, st.getPath.getName)
-        if (!fs.exists(dst)) {
-          if (!fs.rename(st.getPath, dst))
-            throw new java.io.IOException(
-              s"recoverFactPartitions: cannot restore ${st.getPath}")
-        } else fs.delete(st.getPath, true)
-      }
+      fs.listStatus(bakRoot).foreach(st =>
+        Maintenance.restoreDir(fs, new Path(factDir, st.getPath.getName), st.getPath))
       fs.delete(bakRoot, true)
-      ()
     }
   }
 
-  /** D8: flush the status table at startup (daq_status.py:19-33). */
+  /** D8: flush the status table at startup (daq_status.py:19-33),
+    * together with the .bak a crashed swap may have left — the next
+    * merge's [[Maintenance.restoreDir]] would otherwise bring the
+    * flushed rows back. */
   def flushStatus(spark: SparkSession, statusDir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(statusDir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    ()
+    val fs = new Path(statusDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq(statusDir, statusDir + ".bak").foreach(d => fs.delete(new Path(d), true))
   }
 }

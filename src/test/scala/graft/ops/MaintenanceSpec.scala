@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.hadoop.fs.{FileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -183,5 +184,67 @@ class MaintenanceSpec extends AnyFunSuite with SparkSpec {
     val after = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
     assert(after == before)
     assert(!fs.exists(bakRoot))
+  }
+
+  test("compactFactPartitioned drops a hot partition whose every row is evicted; no .pbak left") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_pgone").toString + "/fact"
+    // ch 1 (hist 2): ids 1-2 on day 01, ids 3-4 on day 02 — every row of
+    // day 01 is a victim, so its kept set is empty and nothing is staged
+    (1L to 4L).map(i => (i, 1L, i, s"2026-04-0${1 + (i - 1) / 2}"))
+      .toDF("id", "channel_id", "ts", "day")
+      .write.partitionBy("day").parquet(dir)
+    val channels = Seq((1L, 2)).toDF("id", "history_len")
+    assert(graft.streaming.Ingest.compactFactPartitioned(spark, dir, channels) == Seq("2026-04-01"))
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(!fs.exists(new Path(s"$dir/day=2026-04-01")))
+    assert(!fs.exists(new Path(dir + ".pbak")) && !fs.exists(new Path(dir + ".compact")))
+    assert(spark.read.parquet(dir).select($"id").as[Long].collect().sorted.toSeq == Seq(3L, 4L))
+  }
+
+  /** A local filesystem whose renames fail when `fails(src, dst)`. */
+  private def renameFailingFs(fails: (Path, Path) => Boolean): FileSystem = {
+    val fs = new RawLocalFileSystem {
+      override def rename(src: Path, dst: Path): Boolean =
+        !fails(src, dst) && super.rename(src, dst)
+    }
+    fs.initialize(java.net.URI.create("file:///"), new org.apache.hadoop.conf.Configuration())
+    fs
+  }
+
+  test("swapDir rolls back a failed install and throws; restoreDir throws on a failed restore") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_swap").toString
+    def p(n: String) = new Path(s"$dir/$n")
+    def put(n: String, body: String): Unit = {
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/$n"))
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/$n/part"), body)
+    }
+    def body(n: String) = java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/$n/part"))
+    val fs = renameFailingFs((_, _) => false)
+    put("dst", "old"); put("staged", "new")
+    // install rename fails: old data back in dst, bak gone, staged kept
+    val noInstall = renameFailingFs((src, _) => src.getName == "staged")
+    intercept[java.io.IOException](Maintenance.swapDir(noInstall, p("staged"), p("dst"), p("bak")))
+    assert(body("dst") == "old" && !fs.exists(p("bak")) && fs.exists(p("staged")))
+    // move-aside rename fails: nothing moved
+    val noMoveAside = renameFailingFs((src, _) => src.getName == "dst")
+    intercept[java.io.IOException](
+      Maintenance.swapDir(noMoveAside, p("staged"), p("dst"), p("bak")))
+    assert(body("dst") == "old" && body("staged") == "new" && !fs.exists(p("bak")))
+    // crash between the renames: the old data lives only under bak; a
+    // restore whose rename fails throws and leaves bak in place
+    assert(fs.rename(p("dst"), p("bak")))
+    intercept[java.io.IOException](
+      Maintenance.restoreDir(renameFailingFs((_, _) => true), p("dst"), p("bak")))
+    assert(!fs.exists(p("dst")) && body("bak") == "old")
+    // a swap over that crash leftover keeps bak as its rollback copy
+    intercept[java.io.IOException](Maintenance.swapDir(noInstall, p("staged"), p("dst"), p("bak")))
+    assert(body("dst") == "old" && !fs.exists(p("bak")))
+    Maintenance.swapDir(fs, p("staged"), p("dst"), p("bak"))
+    assert(body("dst") == "new" && !fs.exists(p("bak")) && !fs.exists(p("staged")))
+    // a stale bak next to a live dst is dropped, never restored over it
+    put("bak", "stale")
+    Maintenance.restoreDir(fs, p("dst"), p("bak"))
+    assert(body("dst") == "new" && !fs.exists(p("bak")))
   }
 }

@@ -124,17 +124,51 @@ class IngestSpec extends AnyFunSuite with SparkSpec {
   test("recoverFactDir restores a half-swapped .bak before anything else writes") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_recover").toString
-    val factDir = s"$dir/fact"
-    Seq((1L, ts(10), BigDecimal(50))).toDF("channel_id", "ts", "value")
-      .write.parquet(s"$factDir/batch=b0")
-    // simulate compactFact dying between its two renames: all data
-    // sits in .bak, factDir is gone
+    val (factDir, statusDir) = (s"$dir/fact", s"$dir/status")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(factDir),
-      new org.apache.hadoop.fs.Path(factDir + ".bak")))
+    def path(d: String) = new org.apache.hadoop.fs.Path(d)
+    // simulate a swap dying between its two renames: all data sits in
+    // .bak, the live directory is gone
+    def crashMidSwap(d: String) = assert(fs.rename(path(d), path(d + ".bak")))
+    def samples(rows: (Long, Long)*) =
+      rows.map { case (ch, t) => (ch, ts(t), BigDecimal(50)) }.toDF("channel_id", "ts", "value")
+    def merge(rows: (Long, Long)*) =
+      Ingest.mergeStatus(spark, statusDir, Ingest.statusUpdates(samples(rows: _*), heartbeat = false))
+    def status() = spark.read.parquet(statusDir).select("id", "parameter", "ts").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getTimestamp(2).getTime / 1000)).sortBy(_._2).toSeq
+
+    // fact: compactFact's swap
+    samples(1L -> 10L).write.parquet(s"$factDir/batch=b0")
+    crashMidSwap(factDir)
     Ingest.recoverFactDir(spark, factDir)
     assert(Ingest.readFact(spark, factDir).count() == 1)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(factDir + ".bak")))
+    assert(!fs.exists(path(factDir + ".bak")))
+
+    // status: mergeStatus's swap — the next merge restores the old
+    // rows first, so they survive with their ids
+    merge(1L -> 10L, 2L -> 10L)
+    crashMidSwap(statusDir)
+    merge(3L -> 20L)
+    assert(status() == Seq((1L, "CHL: 1", 10L), (2L, "CHL: 2", 10L), (3L, "CHL: 3", 20L)))
+    assert(!fs.exists(path(statusDir + ".bak")))
+
+    // a stale .bak next to a live directory (a finished swap's leftover)
+    // is dropped, not restored over the live one
+    samples(7L -> 1L, 8L -> 1L).write.parquet(s"$factDir.bak/batch=b0")
+    Ingest.recoverFactDir(spark, factDir)
+    assert(Ingest.readFact(spark, factDir).count() == 1)
+    assert(!fs.exists(path(factDir + ".bak")))
+    Seq((9L, "STALE", 1, ts(1))).toDF("id", "parameter", "status", "ts")
+      .write.parquet(s"$statusDir.bak")
+    merge(1L -> 30L)
+    assert(status() == Seq((1L, "CHL: 1", 30L), (2L, "CHL: 2", 10L), (3L, "CHL: 3", 20L)))
+    assert(!fs.exists(path(statusDir + ".bak")))
+
+    // the D8 flush drops a crashed swap's .bak too, so no later merge
+    // restores the flushed rows
+    crashMidSwap(statusDir)
+    Ingest.flushStatus(spark, statusDir)
+    assert(!fs.exists(path(statusDir)) && !fs.exists(path(statusDir + ".bak")))
   }
 
   test("status upsert is last-writer-wins and idempotent across replays") {
