@@ -37,10 +37,17 @@ import java.util
   *    micro-batch regenerates the same keys — the idempotent sink
   *    depends on it (a wall-clock ts would fork the key space on every
   *    replay);
-  *  - channels are split across `numPartitions` input partitions; in
-  *    tcp mode each PartitionReader owns ONE connection for all its
-  *    channels in the batch (SURVEY.md §3.5 network boundary — the
-  *    driver never touches a socket).
+  *  - the read plan is made once per stream, on the driver. In tcp
+  *    mode each unit's channels are sorted by address and cut into
+  *    blocks of at most 125 touching or overlapping registers
+  *    ([[ModbusSimSource.blocks]]); the blocks are cut into at most
+  *    `numPartitions` contiguous runs, one per input partition. Each
+  *    PartitionReader owns ONE connection for the batch and sends one
+  *    request per block (SURVEY.md §3.5 network boundary — the driver
+  *    never touches a socket). A device exception on a block falls
+  *    back to one read per channel of that block, so a bad address
+  *    fails only its own channel. In sim mode the channels are dealt
+  *    round-robin to `numPartitions` partitions.
   *
   * Options: `channels` = comma list of `id@address[@count[@unit]]`
   * (count defaults to `registers`, unit to `unitId`); `registers` =
@@ -89,6 +96,45 @@ object ModbusSimSource {
     * reference derives this from the format code — FORMAT_LENGTH,
     * modbus.py:26-29), Modbus unit/device id (db_model.py:14). */
   case class Chan(id: Long, addr: Int, count: Int, unit: Int)
+
+  /** Registers [addr, addr + count) of one unit, read by one request;
+    * every channel in `chans` lies inside them. */
+  case class Block(unit: Int, addr: Int, count: Int, chans: Seq[Chan]) {
+    def end: Int = addr + count
+  }
+
+  object Block {
+    def of(ch: Chan): Block = Block(ch.unit, ch.addr, ch.count, Vector(ch))
+  }
+
+  /** Most registers one function-code-3 read returns (Modbus
+    * Application Protocol v1.1b §6.3). */
+  val MaxWords = 125
+
+  /** Channels sorted by (unit, address) and cut into read blocks: a
+    * block is one unit, at most [[MaxWords]] words, and holds only
+    * channels that touch or overlap, so it reads no register that no
+    * channel asked for. Channels on the same registers share a block. */
+  def blocks(channels: Seq[Chan]): Seq[Block] =
+    channels.sortBy(c => (c.unit, c.addr, c.id)).foldLeft(Vector.empty[Block]) { (bs, c) =>
+      bs.lastOption match {
+        case Some(b) if b.unit == c.unit && c.addr <= b.end &&
+            math.max(b.end, c.addr + c.count) - b.addr <= MaxWords =>
+          bs.init :+ b.copy(count = math.max(b.end, c.addr + c.count) - b.addr,
+            chans = b.chans :+ c)
+        case _ => bs :+ Block.of(c)
+      }
+    }
+
+  /** The tcp read plan: [[blocks]] cut into at most `numPartitions`
+    * contiguous runs of nearly equal block counts, so a block never
+    * spans two partitions and each partition's requests stay in
+    * address order. */
+  def plan(channels: Seq[Chan], numPartitions: Int): Seq[Seq[Block]] = {
+    val bs = blocks(channels)
+    val k = math.min(numPartitions, bs.size)
+    (0 until k).map(i => bs.slice(i * bs.size / k, (i + 1) * bs.size / k))
+  }
 
   case class Config(
       channels: Seq[Chan],
@@ -196,13 +242,21 @@ private class ModbusSimMicroBatchStream(config: ModbusSimSource.Config)
     observe(end.asInstanceOf[TickOffset].tick)
   override def stop(): Unit = ()
 
+  // Planned once per stream. tcp reads blocks (ModbusSimSource.plan);
+  // sim has no wire, so each channel is its own block and the channels
+  // keep their interleaved split: sim partitions and row order are
+  // those of a one-read-per-channel plan.
+  private val partitionBlocks: Seq[Seq[ModbusSimSource.Block]] =
+    if (config.mode == "tcp") ModbusSimSource.plan(config.channels, config.numPartitions)
+    else config.channels.zipWithIndex.groupBy(_._2 % config.numPartitions)
+      .toSeq.sortBy(_._1).map(_._2.map(c => ModbusSimSource.Block.of(c._1)))
+  // the blocks carry every channel a reader needs
+  private val taskConfig = config.copy(channels = Nil)
+
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val (s, e) = (start.asInstanceOf[TickOffset].tick, end.asInstanceOf[TickOffset].tick)
     observe(e)
-    val parts = config.channels.zipWithIndex
-      .groupBy(_._2 % config.numPartitions)
-      .values.map(_.map(_._1))
-    parts.map(chs => ModbusSimPartition(chs, s, e, config): InputPartition).toArray
+    partitionBlocks.map(bs => ModbusSimPartition(bs, s, e, taskConfig): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -214,10 +268,12 @@ private class ModbusSimMicroBatchStream(config: ModbusSimSource.Config)
 }
 
 private case class ModbusSimPartition(
-    channels: Seq[ModbusSimSource.Chan],
+    blocks: Seq[ModbusSimSource.Block],
     startTick: Long,
     endTick: Long,
-    config: ModbusSimSource.Config) extends InputPartition
+    config: ModbusSimSource.Config) extends InputPartition {
+  def tsMicros(tick: Long): Long = (config.startEpochSec + tick * config.periodSec) * 1000000L
+}
 
 /** Generates one row per (tick, channel) for ticks in (start, end]
   * from the in-process simulator ramp. */
@@ -225,12 +281,11 @@ private class ModbusSimPartitionReader(p: ModbusSimPartition)
     extends PartitionReader[InternalRow] {
   private val rows: Iterator[InternalRow] = for {
     t <- Iterator.range(p.startTick + 1, p.endTick + 1)
-    ch <- p.channels.iterator
+    ch <- p.blocks.iterator.flatMap(_.chans)
   } yield {
-    val tsMicros = (p.config.startEpochSec + t * p.config.periodSec) * 1000000L
     // simulated device block: hr[a] == a (modbus_server.py:92)
     val regs = Array.tabulate(ch.count)(i => (ch.addr + i) & 0xFFFF)
-    InternalRow(ch.id, tsMicros, ArrayData.toArrayData(regs), 0)
+    InternalRow(ch.id, p.tsMicros(t), ArrayData.toArrayData(regs), 0)
   }
   private var current: InternalRow = _
   override def next(): Boolean = {
@@ -241,11 +296,15 @@ private class ModbusSimPartitionReader(p: ModbusSimPartition)
 }
 
 /** Live mode: one MBAP connection per partition per micro-batch,
-  * amortized over every (tick, channel) read this partition owns — the
-  * network boundary lives inside the reader, never on the driver. A
-  * failed read maps to a status=-1 row with no registers
-  * (bus.py:94-100) and the next read reconnects; a device exception
-  * response keeps the connection (the device is alive and talking). */
+  * amortized over every (tick, block) read this partition owns — the
+  * network boundary lives inside the reader, never on the driver. Each
+  * block is one request, sliced back into one row per channel.
+  *  - A device exception response keeps the connection (the device is
+  *    alive and talking). On a block of several channels it may be one
+  *    bad address, so that block's channels are read one by one and
+  *    only a channel the device refuses fails (bus.py:94-100).
+  *  - A transport failure or timeout makes every channel of the block a
+  *    status=-1 row with no registers, and the next block reconnects. */
 private class ModbusTcpPartitionReader(p: ModbusSimPartition)
     extends PartitionReader[InternalRow] {
   private val client =
@@ -253,18 +312,24 @@ private class ModbusTcpPartitionReader(p: ModbusSimPartition)
   private val emptyRegs = ArrayData.toArrayData(Array.empty[Int])
   private val rows: Iterator[InternalRow] = for {
     t <- Iterator.range(p.startTick + 1, p.endTick + 1)
-    ch <- p.channels.iterator
-  } yield {
-    val tsMicros = (p.config.startEpochSec + t * p.config.periodSec) * 1000000L
+    b <- p.blocks.iterator
+    row <- read(b, p.tsMicros(t))
+  } yield row
+
+  private def read(b: ModbusSimSource.Block, tsMicros: Long): Seq[InternalRow] =
     try {
-      val regs = client.readHoldingRegisters(ch.unit, ch.addr, ch.count)
-      InternalRow(ch.id, tsMicros, ArrayData.toArrayData(regs), 0)
+      val words = client.readHoldingRegisters(b.unit, b.addr, b.count)
+      b.chans.map { ch =>
+        val from = ch.addr - b.addr
+        val regs = java.util.Arrays.copyOfRange(words, from, from + ch.count)
+        InternalRow(ch.id, tsMicros, ArrayData.toArrayData(regs), 0)
+      }
     } catch {
-      case _: java.io.IOException => // transport failure, timeout, or
-        // device exception response: sample becomes a status=-1 row
-        InternalRow(ch.id, tsMicros, emptyRegs, -1)
+      case _: ModbusException if b.chans.size > 1 =>
+        b.chans.flatMap(ch => read(ModbusSimSource.Block.of(ch), tsMicros))
+      case _: java.io.IOException =>
+        b.chans.map(ch => InternalRow(ch.id, tsMicros, emptyRegs, -1))
     }
-  }
   private var current: InternalRow = _
   override def next(): Boolean = {
     if (rows.hasNext) { current = rows.next(); true } else false

@@ -64,6 +64,86 @@ class ModbusTcpSourceSpec extends AnyFunSuite with SparkSpec {
     } finally server.close()
   }
 
+  test("a reply for another unit throws IOException, not a device exception") {
+    val server = new ModbusTestServer(wrongUnit = true)
+    try {
+      val c = new ModbusTcpClient("127.0.0.1", server.port, 1000)
+      try {
+        val e = intercept[java.io.IOException](c.readHoldingRegisters(1, 5, 2))
+        assert(!e.isInstanceOf[ModbusException] && e.getMessage.contains("unit"), e)
+      } finally c.close()
+    } finally server.close()
+  }
+
+  /** Polls `channels` on one partition for `ticks` ticks; rows as
+    * (channel_id, status, registers), by channel then tick. */
+  private def poll(port: Int, channels: String, ticks: Int, name: String)
+      : Seq[(Long, Int, Seq[Int])] = {
+    import spark.implicits._
+    val q = spark.readStream
+      .format("modbus-tcp")
+      .option("host", "127.0.0.1")
+      .option("port", port.toString)
+      .option("channels", channels)
+      .option("numPartitions", "1")
+      .option("maxTicks", ticks.toString)
+      .load()
+      .writeStream.format("memory").queryName(name).outputMode("append").start()
+    try {
+      q.processAllAvailable()
+      q.processAllAvailable()
+      spark.table(name).orderBy($"channel_id", $"ts").collect()
+        .map(r => (r.getLong(0), r.getInt(3), r.getSeq[Int](2))).toSeq
+    } finally q.stop()
+  }
+
+  private def ramp(addr: Int, count: Int): Seq[Int] = addr until addr + count
+
+  test("touching channels on one unit cost one request per tick, sliced back per channel") {
+    val server = new ModbusTestServer()
+    try {
+      val rows = poll(server.port, "1@10@2,2@12@2,3@14@2,4@16@2", 2, "modbus_tcp_block")
+      assert(rows == (1 to 4).flatMap(i => Seq.fill(2)((i.toLong, 0, ramp(8 + 2 * i, 2)))))
+      assert(server.requestCount == 2)
+    } finally server.close()
+  }
+
+  test("a gap, another unit and shared registers: one request per block, the right words per row") {
+    val server = new ModbusTestServer()
+    try {
+      // blocks: unit 1 [10,14) {1,2}; unit 1 [20,23) {3,4,6}; unit 2 [10,12) {5}
+      val rows = poll(server.port,
+        "1@10@2,2@12@2,3@20@2,4@20@2,6@21@2,5@10@2@2", 1, "modbus_tcp_blocks")
+      assert(rows == Seq(
+        (1L, 0, ramp(10, 2)), (2L, 0, ramp(12, 2)), (3L, 0, ramp(20, 2)),
+        (4L, 0, ramp(20, 2)), (5L, 0, ramp(10, 2)), (6L, 0, ramp(21, 2))))
+      assert(server.requestCount == 3)
+    } finally server.close()
+  }
+
+  test("a device exception on a block falls back to per-channel reads; only the bad channel fails") {
+    val server = new ModbusTestServer()
+    try {
+      // [96,100) crosses the server's 99-register end; 1@96@2 alone does not
+      val rows = poll(server.port, "1@96@2,2@98@2", 1, "modbus_tcp_fallback")
+      assert(rows == Seq((1L, 0, ramp(96, 2)), (2L, -1, Seq.empty[Int])))
+      assert(server.requestCount == 1 + 2)
+    } finally server.close()
+  }
+
+  test("a transport drop fails exactly the dropped block's channels; the next block reconnects") {
+    val server = new ModbusTestServer(dropEveryNth = 2)
+    try {
+      // blocks {1,2}, {3,4}, {5}: request 2 (the second block) is dropped
+      val rows = poll(server.port, "1@0@2,2@2@2,3@10@2,4@12@2,5@20@2", 1, "modbus_tcp_drop")
+      assert(rows == Seq(
+        (1L, 0, ramp(0, 2)), (2L, 0, ramp(2, 2)),
+        (3L, -1, Seq.empty[Int]), (4L, -1, Seq.empty[Int]),
+        (5L, 0, ramp(20, 2))))
+      assert(server.requestCount == 3)
+    } finally server.close()
+  }
+
   test("golden check over TCP: UINT16 @ address A ingests value A through the full pipeline") {
     import spark.implicits._
     val server = new ModbusTestServer()

@@ -19,13 +19,16 @@ import java.util.concurrent.atomic.AtomicInteger
   *  - `maxRequests` answers exactly N requests then closes the whole
   *    server — a deterministic DEVICE OUTAGE start for flap tests;
   *  - `fixedPort` rebinds a restarted instance on the dead server's
-  *    port (the flap's "device comes back at the same address").
+  *    port (the flap's "device comes back at the same address");
+  *  - `wrongUnit` answers every request as unit + 1 (a gateway that
+  *    routes a reply to the wrong request).
   */
 final class ModbusTestServer(
     responseDelayMs: Int = 0,
     dropEveryNth: Int = 0,
     maxRequests: Int = 0,
-    fixedPort: Int = 0) extends AutoCloseable {
+    fixedPort: Int = 0,
+    wrongUnit: Boolean = false) extends AutoCloseable {
 
   private val server = new ServerSocket()
   server.setReuseAddress(true) // flap restarts rebind the same port
@@ -57,7 +60,7 @@ final class ModbusTestServer(
         val txn = in.readUnsignedShort()
         val proto = in.readUnsignedShort()
         val len = in.readUnsignedShort()
-        val unit = in.readUnsignedByte()
+        val unit = in.readUnsignedByte() + (if (wrongUnit) 1 else 0)
         val fn = in.readUnsignedByte()
         val addr = in.readUnsignedShort()
         val count = in.readUnsignedShort()
