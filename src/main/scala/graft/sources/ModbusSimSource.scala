@@ -153,9 +153,17 @@ object ModbusSimSource {
     val chans = options.getOrDefault("channels", "1@5,2@17")
       .split(",").toSeq.map { s =>
         val parts = s.trim.split("@")
-        Chan(parts(0).toLong, parts(1).toInt,
+        val c = Chan(parts(0).toLong, parts(1).toInt,
           if (parts.length > 2) parts(2).toInt else defaultCount,
           if (parts.length > 3) parts(3).toInt else defaultUnit)
+        // the wire keeps 16 address bits and 8 unit bits: out of range
+        // would silently read another register or device
+        def check(ok: Boolean, what: String): Unit = require(ok, s"channel ${c.id}: $what")
+        check(c.addr >= 0 && c.addr <= 0xFFFF, s"address ${c.addr} not in 0-65535")
+        check(c.count >= 1 && c.count <= MaxWords, s"count ${c.count} not in 1-$MaxWords")
+        check(c.addr + c.count <= 0x10000, s"registers ${c.addr}+${c.count} pass 65535")
+        check(c.unit >= 0 && c.unit <= 0xFF, s"unit ${c.unit} not in 0-255")
+        c
       }
     val mode = options.getOrDefault("mode", "sim").toLowerCase
     require(mode == "sim" || mode == "tcp", s"mode must be sim|tcp, got $mode")

@@ -3,11 +3,14 @@ package graft.streaming
 import graft.functions.{Conversions, ModbusDecode}
 import graft.ops.Maintenance
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{DecimalType, LongType}
+import org.apache.spark.sql.types._
+
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** The reference daemon's acquire -> decode -> convert -> persist
   * dataflow (SURVEY.md §3) as ONE Structured Streaming pipeline.
@@ -23,7 +26,8 @@ import org.apache.spark.sql.types.{DecimalType, LongType}
   *
   * Scale: decode/convert are codegen'd column expressions; the channel
   * dimension is broadcast; the fact append is partitioned parquet.
-  * Nothing in the hot path touches the driver.
+  * Only the status upsert folds on the driver, one row per parameter
+  * ([[mergeStatus]]).
   */
 object Ingest {
 
@@ -53,19 +57,24 @@ object Ingest {
       .withColumn("raw", ModbusDecode.decode(col("format_code"), col("registers")))
       .withColumn("value",
         Conversions.applyConversions(conversions, col("conversion_id"), col("raw"))
-          .cast(DecimalType(25, 6)))
+          .cast(factSchema("value").dataType))
       .select(col("channel_id"), col("ts"), col("value"))
   }
 
   /** Latest-status updates for a micro-batch: one "CHL: <id>" row per
     * channel seen (reference daq-3i.py:284), plus the heartbeat row
-    * when `heartbeat` is set (daq-3i.py:163-171). */
+    * when `heartbeat` is set (daq-3i.py:163-171). The (channel_id, ts)
+    * pairs are coalesced to one partition, which already satisfies
+    * both aggregates' distribution: no shuffle, one Spark job for
+    * [[mergeStatus]]'s collect, which takes every row to the driver
+    * anyway. */
   def statusUpdates(batch: DataFrame, heartbeat: Boolean): DataFrame = {
-    val chl = batch.groupBy(col("channel_id")).agg(max(col("ts")).as("ts"))
+    val samples = batch.select(col("channel_id"), col("ts")).coalesce(1)
+    val chl = samples.groupBy(col("channel_id")).agg(max(col("ts")).as("ts"))
       .select(
         format_string("CHL: %d", col("channel_id")).as("parameter"),
         lit(1).as("status"), col("ts"))
-    if (heartbeat) chl.unionByName(heartbeatUpdate(batch, col("ts")))
+    if (heartbeat) chl.unionByName(heartbeatUpdate(samples, col("ts")))
     else chl
   }
 
@@ -85,26 +94,41 @@ object Ingest {
     * a transactional store via the same foreachBatch MERGE). */
   private val statusLock = new Object
 
-  /** Merge status updates into the keyed status table on disk as ONE
-    * distributed plan (the table is bounded by parameter count ≈
-    * channel count, db_model.py:57-62, but a 10M-channel deployment
-    * must not funnel it through the driver; the only driver-side work
-    * is the existence probes and the swap renames). The directory is
-    * listed once; table and updates are unioned and ranked in one
-    * `parameter` window that carries each parameter's existing id and
-    * keeps its latest row. The merged table is computed lazily OVER
-    * the directory it replaces, so the write lands aside and installs
-    * via [[Maintenance.swapDir]] — the data is never deleted before its
-    * replacement is in place, and a swap that dies between renames is
-    * restored ([[Maintenance.restoreDir]]) at the next merge's entry
-    * probe.
+  /** The status table's on-disk form: the reference's surrogate `id`
+    * (db_model.py:58 autoincrement PK) and the latest row per
+    * parameter. */
+  private val statusSchema: StructType = StructType(Seq(
+    StructField("id", LongType), StructField("parameter", StringType),
+    StructField("status", IntegerType), StructField("ts", TimestampType)))
+
+  /** One parameter's merge state: its existing id, whether the table
+    * holds it, and its newest row so far (in [[statusSchema]] form). */
+  private case class StatusSlot(id: Option[Long], inTable: Boolean, row: Row)
+
+  /** `ts` order with nulls first, so a null `ts` never wins. */
+  private val tsOrder = Ordering.Option(Ordering.ordered[java.sql.Timestamp])
+
+  /** Merge status updates into the keyed status table on disk, folded
+    * on the driver. The table holds one row per parameter (≈ channel
+    * count, db_model.py:57-62) and `statusUpdates` at most one per
+    * channel, so the driver holds at most one row per parameter of
+    * each — the memory bound of this merge. The table is one file
+    * written by one task in any case, so the fold gives up no
+    * parallelism, and it costs three Spark jobs: one read with a
+    * fixed schema (no inference job; an id-less legacy table reads
+    * null ids), one collect of the updates, one write.
     *
-    * The persisted table carries the reference's surrogate `id`
-    * (db_model.py:58 autoincrement PK): a parameter keeps its id
-    * across upserts; rows without one — parameters seen for the first
-    * time, and the rows of an id-less legacy table — take the next
-    * dense ids after the current max, legacy rows first, each group in
-    * parameter order, which makes replays deterministic. */
+    * Per parameter, the fold keeps the max existing id and the row
+    * with the newest `ts` (nulls last; on an equal `ts` the update
+    * wins, so a same-second replay resolves deterministically). Rows
+    * without an id — parameters seen for the first time, and the rows
+    * of an id-less legacy table — take the next dense ids after the
+    * current max, legacy rows first, each group in parameter order,
+    * which makes replays deterministic. The merged table lands aside
+    * and installs via [[Maintenance.swapDir]] — the data is never
+    * deleted before its replacement is in place, and a swap that dies
+    * between renames is restored ([[Maintenance.restoreDir]]) at the
+    * next merge's entry probe. */
   def mergeStatus(spark: SparkSession, statusDir: String, updates: DataFrame): Unit = statusLock.synchronized {
     // First-run absence is the ONLY condition that substitutes an empty
     // current table — probed explicitly, so a genuine read failure
@@ -116,41 +140,35 @@ object Ingest {
     val fs = statusPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bak = new Path(statusDir + ".bak")
     Maintenance.restoreDir(fs, statusPath, bak)
-    val noId = lit(null).cast(LongType).as("id")
     val current =
-      if (fs.exists(statusPath)) {
-        // a statusDir written by an id-less engine version reads null
-        // ids, backfilled below like new parameters
-        val onDisk = spark.read.parquet(statusDir)
-        if (onDisk.columns.contains("id")) onDisk else onDisk.select(col("*"), noId)
+      if (fs.exists(statusPath)) spark.read.schema(statusSchema).parquet(statusDir).collect()
+      else Array.empty[Row]
+    val incoming = updates
+      .select(lit(null).cast(LongType), col("parameter"), col("status"), col("ts")).collect()
+    // parameter -> its fold; table rows first, so an update folded
+    // later wins an equal ts
+    val slots = mutable.HashMap.empty[String, StatusSlot]
+    def fold(r: Row, update: Boolean): Unit = {
+      val id = if (r.isNullAt(0)) None else Some(r.getLong(0))
+      slots(r.getString(1)) = slots.get(r.getString(1)) match {
+        case None => StatusSlot(id, !update, r)
+        case Some(s) =>
+          val c = tsOrder.compare(Option(r.getTimestamp(3)), Option(s.row.getTimestamp(3)))
+          StatusSlot((s.id ++ id).maxOption, s.inTable || !update,
+            if (c > 0 || (c == 0 && update)) r else s.row)
       }
-      else updates.limit(0).select(col("*"), noId)
-    val maxId = current.select(coalesce(max(col("id")), lit(0L))).scalar()
-    val dataCols = updates.columns.toSeq.map(col)
-    // tie-break equal timestamps in favor of the incoming update so a
-    // same-second replay/recompute resolves deterministically
-    val w = Window.partitionBy(col("parameter")).orderBy(col("ts").desc, col("__src").desc)
-    val whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val latest = current.select(col("id") +: dataCols :+ lit(0).as("__src"): _*)
-      .unionByName(updates.select(noId +: dataCols :+ lit(1).as("__src"): _*))
-      .select(dataCols ++ Seq(
-        max(col("id")).over(whole).as("id"),
-        min(col("__src")).over(whole).as("__new"), // 1: not yet in the table
-        row_number().over(w).as("__rn")): _*)
-      .filter(col("__rn") === 1)
-    // bounded-global-window: only id-less rows (0-1 per steady-state
-    // merge; at most the table, which repartition(1) below writes from
-    // one task anyway)
-    val fresh = latest.filter(col("id").isNull).withColumn("id",
-      maxId + row_number().over(Window.orderBy(col("__new"), col("parameter"))))
-    // single output file (repartition, not coalesce — a barrier keeps
-    // the merge itself parallel): the status table is a control table
-    // read whole by monitors; revisit if parameter count outgrows one
-    // file
-    val out = latest.filter(col("id").isNotNull).unionByName(fresh)
-      .select(col("id") +: dataCols: _*).repartition(1)
+    }
+    current.foreach(fold(_, update = false))
+    incoming.foreach(fold(_, update = true))
+    val maxId = slots.valuesIterator.flatMap(_.id).maxOption.getOrElse(0L)
+    val (kept, fresh) = slots.values.toSeq.partition(_.id.isDefined)
+    val numbered = fresh.sortBy(s => (!s.inTable, s.row.getString(1))).zipWithIndex
+      .map { case (s, i) => s.copy(id = Some(maxId + i + 1)) }
+    val rows = (kept ++ numbered).sortBy(_.id.get)
+      .map(s => Row(s.id.get, s.row.get(1), s.row.get(2), s.row.get(3)))
     val tmp = statusDir + ".tmp"
-    out.write.mode("overwrite").parquet(tmp)
+    spark.createDataFrame(rows.asJava, statusSchema).coalesce(1)
+      .write.mode("overwrite").parquet(tmp)
     Maintenance.swapDir(fs, new Path(tmp), statusPath, bak)
   }
 
@@ -174,9 +192,16 @@ object Ingest {
     } finally { batch.unpersist(); () }
   }
 
-  /** Read the fact sink without its physical batch partition column. */
+  /** The fact table's columns, exactly as [[decodeAndConvert]] emits
+    * them (the reference's NUMERIC(25,6) value). */
+  val factSchema: StructType = StructType(Seq(
+    StructField("channel_id", LongType), StructField("ts", TimestampType),
+    StructField("value", DecimalType(25, 6))))
+
+  /** Read the fact sink without its physical batch partition column.
+    * The fixed schema spares every read a schema-inference job. */
   def readFact(spark: SparkSession, factDir: String): DataFrame =
-    spark.read.parquet(factDir).drop("batch")
+    spark.read.schema(factSchema).parquet(factDir).drop("batch")
 
   /** D6's fact append into a JDBC store with the same effective
     * exactly-once the parquet path gets from batch-keyed directory

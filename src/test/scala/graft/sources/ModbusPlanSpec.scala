@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.sources.ModbusSimSource.{Block, Chan, blocks, plan}
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.util.Random
@@ -63,5 +64,15 @@ class ModbusPlanSpec extends AnyFunSuite {
       assert(b.count <= ModbusSimSource.MaxWords)
       assert(b.chans.forall(c => c.unit == b.unit && c.addr >= b.addr && c.addr + c.count <= b.end))
     }
+  }
+
+  test("parse refuses channels the wire cannot address") {
+    def parse(channels: String) = ModbusSimSource.parse(
+      new CaseInsensitiveStringMap(java.util.Map.of("channels", channels))).channels
+    // address past 16 bits, negative address, count outside 1-125, a
+    // block past register 65535, unit past 8 bits
+    for (bad <- Seq("1@65541", "1@-1", "1@5@0", "1@5@126", "1@65535@2", "1@5@1@256", "1@5@1@-1"))
+      assert(intercept[IllegalArgumentException](parse(bad)).getMessage.contains("channel 1:"), bad)
+    assert(parse("1@65535@1@255,2@0@125@0") == Seq(Chan(1, 65535, 1, 255), Chan(2, 0, 125, 0)))
   }
 }

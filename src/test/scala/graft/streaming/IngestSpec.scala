@@ -202,11 +202,10 @@ class IngestSpec extends AnyFunSuite with SparkSpec {
     assert(got.toSeq == Seq((1L, "CHL: 1"), (2L, "CHL: 2"), (4L, "CHL: 3"), (3L, "daq-3i")))
   }
 
-  test("status upsert at 100k parameters: distributed merge, stable dense ids") {
-    // the scale case a driver-collect implementation would funnel
-    // through the driver: the merge is one distributed plan (window
-    // over parameter for id retention, max(id) as a scalar subquery,
-    // write-aside swap) — the driver only probes paths and renames
+  test("status upsert at 100k parameters: stable dense ids") {
+    // the scale case for the driver fold: it holds one row per
+    // parameter (100k table rows, then 100k + 110), numbers the new
+    // ones densely after the max id, and writes one file
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_status_100k").toString + "/status"
     def updates(n: Int, tsSec: Int, prefix: String = "P") =
@@ -247,15 +246,10 @@ class IngestSpec extends AnyFunSuite with SparkSpec {
     assert(got == Seq((1L, "A", 1, 10L), (3L, "N", 0, 30L), (2L, "P", 1, 10L)))
   }
 
-  test("steady-state status merge is one plan: Spark job count stays bounded") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft_status_jobs").toString + "/status"
-    def updates(tsSec: Int) = spark.range(50).select(
-      format_string("CHL: %d", $"id").as("parameter"), lit(1).as("status"), lit(ts(tsSec)).as("ts"))
-    Ingest.mergeStatus(spark, dir, updates(10))
-    Ingest.mergeStatus(spark, dir, updates(20))
-    // count only this thread's jobs (subquery jobs inherit the property)
-    val tag = "graft.test.mergeStatus"
+  /** `body`'s result and the Spark jobs it runs on this thread
+    * (subquery jobs inherit the local property that tags them). */
+  private def jobsOf[A](body: => A): (A, Int) = {
+    val tag = "graft.test.jobs"
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
@@ -263,27 +257,56 @@ class IngestSpec extends AnyFunSuite with SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     spark.sparkContext.setLocalProperty(tag, "1")
-    val n =
-      try {
-        Ingest.mergeStatus(spark, dir, updates(30)) // every parameter already has an id
-        // listener delivery is async — poll until the count stops moving
-        var last = -1; var stable = 0
-        while (stable < 3) {
-          Thread.sleep(100)
-          val cur = jobs.get()
-          if (cur == last) stable += 1 else { stable = 0; last = cur }
-        }
-        last
-      } finally {
-        spark.sparkContext.setLocalProperty(tag, null)
-        spark.sparkContext.removeSparkListener(listener)
+    try {
+      val out = body
+      // listener delivery is async — poll until the count stops moving
+      var last = -1; var stable = 0
+      while (stable < 3) {
+        Thread.sleep(100)
+        val cur = jobs.get()
+        if (cur == last) stable += 1 else { stable = 0; last = cur }
       }
-    // 5 jobs as one plan (Spark 4.1, AQE on); the RDD zipWithIndex id
-    // assignment, driver max-id probe and second status read it replaced
-    // ran 11
-    assert(n <= 5, s"steady-state mergeStatus ran $n Spark jobs")
+      (out, last)
+    } finally {
+      spark.sparkContext.setLocalProperty(tag, null)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  test("steady-state status merge folds on the driver: three Spark jobs") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_status_jobs").toString + "/status"
+    def updates(tsSec: Int) = spark.range(50).select(
+      format_string("CHL: %d", $"id").as("parameter"), lit(1).as("status"), lit(ts(tsSec)).as("ts"))
+    Ingest.mergeStatus(spark, dir, updates(10))
+    Ingest.mergeStatus(spark, dir, updates(20))
+    // every parameter already has an id
+    val (_, n) = jobsOf(Ingest.mergeStatus(spark, dir, updates(30)))
+    // one read with the fixed schema, one collect of the updates, one
+    // write: no schema inference, no max-id subquery, no shuffle
+    assert(n == 3, s"steady-state mergeStatus ran $n Spark jobs")
     val got = spark.read.parquet(dir)
     assert(got.count() == 50 && got.select($"id").distinct().count() == 50)
     assert(got.agg(max($"id")).head().getLong(0) == 50L)
+    // a tick's updates (per-channel newest ts plus the heartbeat)
+    // collect in one job: no shuffle
+    val batch = spark.range(50).select($"id".as("channel_id"), lit(ts(40)).as("ts"))
+    val (ups, m) = jobsOf(Ingest.statusUpdates(batch, heartbeat = true).collect())
+    assert(m == 1, s"statusUpdates collect ran $m Spark jobs")
+    assert(ups.length == 51 && ups.forall(_.getTimestamp(2) == ts(40)))
+  }
+
+  test("readFact reads with the fixed fact schema: no schema-inference job") {
+    val dir = Files.createTempDirectory("graft_fact_jobs").toString + "/fact"
+    val fact = spark.range(4).select(col("id").as("channel_id"),
+      lit(ts(10)).as("ts"), (col("id") * 10).cast("decimal(25,6)").as("value"))
+    fact.write.parquet(s"$dir/batch=b0")
+    fact.write.parquet(s"$dir/batch=b1")
+    // the collect alone: the fixed schema needs no footer-reading job
+    val (rows, n) = jobsOf(Ingest.readFact(spark, dir).collect())
+    assert(n == 1, s"readFact + collect ran $n Spark jobs")
+    assert(Ingest.readFact(spark, dir).schema == Ingest.factSchema)
+    assert(rows.map(r => (r.getLong(0), r.getDecimal(2).toPlainString)).sorted.toSeq ==
+      (0L to 3L).flatMap(i => Seq.fill(2)((i, s"${i * 10}.000000"))))
   }
 }

@@ -133,7 +133,8 @@ class RecoverySpec extends AnyFunSuite with SparkSpec {
     val (factDir, statusDir) = (s"$dir/fact", s"$dir/status")
     def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
     def mk(sec: Long) =
-      Seq((1L, ts(sec), BigDecimal(sec).setScale(6))).toDF("channel_id", "ts", "value")
+      Seq((1L, ts(sec), BigDecimal(sec))).toDF("channel_id", "ts", "value")
+        .withColumn("value", $"value".cast("decimal(25,6)")) // the fact schema's type
     val channels = Seq((1L, 100L)).toDF("id", "history_len")
 
     // committed history: batches 0 and 1 (checkpoint owns them)
