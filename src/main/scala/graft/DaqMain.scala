@@ -101,8 +101,9 @@ object DaqMain {
         extraSources = dExtra)
       daemon.start()
       try {
-        daemon.ingest.processAllAvailable() // bounded source drains
-        if (!flags.contains("NO-TRUNC")) Ingest.compactFact(spark, daemon.factDir, dChannels)
+        // the bounded source drains; the daemon's own sink compacts once
+        if (flags.contains("NO-TRUNC")) daemon.ingest.processAllAvailable()
+        else daemon.drainAndCompact()
         if (flags.contains("PRINT-LIVE")) {
           println("=== channel_data ===")
           Ingest.readFact(spark, daemon.factDir).orderBy("channel_id", "ts").show(50, truncate = false)

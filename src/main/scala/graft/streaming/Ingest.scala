@@ -24,6 +24,11 @@ import scala.jdk.CollectionConverters._
   * checkpointed exactly-once (vs the reference's at-least-once dirty
   * flag, and with NO last-value-wins sample loss — SURVEY.md §3.2).
   *
+  * This object holds the stages; [[Daemon]] owns the stream and its
+  * one tick (retention when due, then [[persistBatch]] or the JDBC
+  * twin through [[landBatch]]), which the live stream and the backfill
+  * both run.
+  *
   * Scale: decode/convert are codegen'd column expressions; the channel
   * dimension is broadcast; the fact append is partitioned parquet.
   * Only the status upsert folds on the driver, one row per parameter
@@ -172,25 +177,34 @@ object Ingest {
     Maintenance.swapDir(fs, new Path(tmp), statusPath, bak)
   }
 
-  /** Land one micro-batch: fact append + status upsert. The fact write
-    * goes to a batchId-keyed partition directory with overwrite, so a
-    * replay of the same batch (crash after write, before the
-    * checkpoint commit) lands in the same directory and overwrites
-    * deterministically instead of duplicating — idempotent, which is
-    * what turns the checkpoint's at-least-once replay into effective
-    * exactly-once. The status merge is last-writer-wins and therefore
-    * idempotent by construction. */
+  /** Land one micro-batch: `writeFact`, then the status upsert with the
+    * heartbeat row (D7+D10), with the batch persisted across both so
+    * the source and decode run once. Both sinks of [[Daemon]] land
+    * through here. The status merge is last-writer-wins and therefore
+    * idempotent by construction; `writeFact` must be idempotent under
+    * replay of the same batch. */
+  def landBatch(batch: DataFrame, statusDir: String)(writeFact: => Unit): Unit = {
+    batch.persist()
+    try {
+      writeFact
+      mergeStatus(batch.sparkSession, statusDir, statusUpdates(batch, heartbeat = true))
+    } finally { batch.unpersist(); () }
+  }
+
+  /** Land one micro-batch into the parquet sink: fact append + status
+    * upsert ([[landBatch]]). The fact write goes to a batchId-keyed
+    * partition directory with overwrite, so a replay of the same batch
+    * (crash after write, before the checkpoint commit) lands in the
+    * same directory and overwrites deterministically instead of
+    * duplicating — idempotent, which is what turns the checkpoint's
+    * at-least-once replay into effective exactly-once. */
   def persistBatch(
       batch: DataFrame, batchId: Long,
       factDir: String, statusDir: String,
-      batchPrefix: String = "b"): Unit = {
-    val spark = batch.sparkSession
-    batch.persist()
-    try {
+      batchPrefix: String = "b"): Unit =
+    landBatch(batch, statusDir) {
       batch.write.mode("overwrite").parquet(s"$factDir/batch=$batchPrefix$batchId") // D6
-      mergeStatus(spark, statusDir, statusUpdates(batch, heartbeat = true)) // D7+D10
-    } finally { batch.unpersist(); () }
-  }
+    }
 
   /** The fact table's columns, exactly as [[decodeAndConvert]] emits
     * them (the reference's NUMERIC(25,6) value). */
@@ -369,68 +383,6 @@ object Ingest {
   def readFactJdbc(spark: SparkSession, url: String, table: String): DataFrame =
     spark.read.format("jdbc").option("url", url).option("dbtable", table)
       .load().drop("batch_id")
-
-  /** Start the full ingestion stream. Each micro-batch lands decoded
-    * samples in `factDir` and upserts `statusDir`; exactly-once =
-    * checkpointed offsets + idempotent [[persistBatch]] replays. */
-  def start(
-      readings: DataFrame,
-      channels: DataFrame,
-      conversions: Seq[(Long, String)],
-      factDir: String,
-      statusDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val decoded = decodeAndConvert(readings, channels, conversions)
-    decoded.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        persistBatch(batch, batchId, factDir, statusDir)
-      }
-      .start()
-  }
-
-  /** Backfill/replay: drain all currently-available raw readings from
-    * a parquet directory through the SAME decode/convert/persist
-    * pipeline as the live stream, then stop (Trigger.AvailableNow —
-    * checkpointed micro-batches, so a crashed backfill resumes where
-    * it left off and a re-run over an unchanged directory is a no-op).
-    * The reference daemon only tails live devices; a 100 TB engine
-    * additionally needs deterministic reprocessing of landed raw data
-    * with the exact same semantics as the live path — same plan, same
-    * sink idempotence, different trigger.
-    *
-    * Backfill batches land under `batch=bf<id>` partitions: the
-    * checkpoint restarts batch ids at 0, so without the distinct
-    * prefix a backfill into a factDir already fed by the LIVE stream
-    * (whose checkpoint owns `batch=b<id>`) would overwrite committed
-    * live partitions. Idempotence holds per checkpoint lineage; the
-    * prefix keeps the two lineages disjoint. Do NOT run a backfill
-    * concurrently with a live [[Daemon]] on the same factDir: the
-    * daemon's in-loop compaction swaps the whole directory and would
-    * race the backfill's partition writes — run backfills with the
-    * daemon stopped, or into a separate factDir union'd at read time. */
-  def runBackfill(
-      spark: SparkSession,
-      rawDir: String,
-      channels: DataFrame,
-      conversions: Seq[(Long, String)],
-      factDir: String,
-      statusDir: String,
-      checkpointDir: String): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
-    val readings = spark.readStream
-      .schema(graft.sources.ModbusSimSource.schema)
-      .parquet(rawDir)
-    val decoded = decodeAndConvert(readings, channels, conversions)
-    val q = decoded.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        persistBatch(batch, batchId, factDir, statusDir, batchPrefix = "bf")
-      }
-      .start()
-    q.awaitTermination()
-  }
 
   /** D10 as an independent stream: the reference pulses
     * `("daq-3i", 1)` every PULSE_SECONDS regardless of data flow

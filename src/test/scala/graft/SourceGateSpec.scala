@@ -20,7 +20,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * Swap gate: every directory replacement goes through
   * `Maintenance.swapDir` / `restoreDir`, so a `.rename(` anywhere else
   * in main source fails this spec — the crash-safe swap protocol
-  * cannot fork into hand-written copies that drift apart. */
+  * cannot fork into hand-written copies that drift apart.
+  *
+  * Tick gate: the daemon's micro-batch tick is written once
+  * (`Daemon.tick` over the sink chosen once per daemon), so each sink
+  * step has exactly one call site in main source — a second
+  * `foreachBatch` around `persistBatch` would fork the tick. */
 class SourceGateSpec extends AnyFunSuite {
 
   private val mainRoot = new java.io.File("src/main/scala")
@@ -78,5 +83,25 @@ class SourceGateSpec extends AnyFunSuite {
       "directory rename outside Maintenance.swapDir/restoreDir (route the " +
         "replacement through swapDir, its crash recovery through " +
         "restoreDir):\n" + offenders.mkString("\n"))
+  }
+
+  test("each tick step has exactly one call site in main source") {
+    val steps = Seq("persistBatch", "persistBatchJdbc",
+      "compactBeforePersist", "compactBeforePersistJdbc")
+    val lines = scalaFiles(mainRoot).flatMap { f =>
+      read(f).split("\n", -1).zipWithIndex.collect {
+        case (l, i) if !isComment(l.trim) => (s"${f.getPath}:${i + 1}", l)
+      }
+    }
+    val sites = steps.map { step =>
+      // `\b` before, `(` right after: neither a longer name nor a `def`
+      val call = ("""(?<!def )\b""" + step + """\(""").r
+      step -> lines.collect { case (at, l) if call.findFirstIn(l).isDefined => at }
+    }
+    val offenders = sites.filter(_._2.size != 1)
+    assert(offenders.isEmpty,
+      "a tick step must be called from the daemon's one tick only:\n" +
+        offenders.map { case (s, at) => s"$s: ${at.size} call sites ${at.mkString(", ")}" }
+          .mkString("\n"))
   }
 }

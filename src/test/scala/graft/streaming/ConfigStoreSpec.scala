@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 
 /** The reference's config-store-driven startup (daq-3i.py:106-161),
   * end to end: CREATE-TABLE schemas seeded with buses/channels/
@@ -226,24 +227,29 @@ class ConfigStoreSpec extends AnyFunSuite with SparkSpec {
     val dir = Files.createTempDirectory("graft_daemon_rocks").toString
     val channels = Seq((1L, 4, 0L, 100), (2L, 4, 0L, 100))
       .toDF("id", "format_code", "conversion_id", "history_len")
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
+    // the provider is a session setting, set before the query starts —
+    // as a deployment sets it at session build
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val daemon = new Daemon(
       spark, channels, Seq.empty,
       Map("channels" -> "1@5,2@17", "registers" -> "4",
         "startEpochSec" -> "0", "periodSec" -> "1", "maxTicks" -> "3"),
       dir,
       pulseSec = 3600, truncIntervalSec = 3600,
-      stateStore = Some("rocksdb"),
       dedupeLateness = Some("10 seconds"))
-    daemon.start()
     try {
+      daemon.start()
       daemon.ingest.processAllAvailable()
-      assert(spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-        .contains("RocksDBStateStoreProvider"))
-      // the dedup stage is stateful -> RocksDB-backed state operator ran
+      // the dedup stage is stateful -> RocksDB-backed state operator ran:
+      // only the RocksDB provider reports its rocksdb* custom metrics
       val progress = daemon.ingest.lastProgress
       assert(progress != null && progress.stateOperators.nonEmpty,
         "expected a stateful operator in the ingest query")
+      val metrics = progress.stateOperators.head.customMetrics.keySet.asScala
+      assert(metrics.exists(_.startsWith("rocksdb")),
+        s"state operator did not run on RocksDB: custom metrics $metrics")
       // results identical to the plain daemon: 3 ticks x 2 channels
       val fact = Ingest.readFact(spark, daemon.factDir)
         .select($"channel_id", $"ts", $"value".cast("double")).collect()
@@ -256,8 +262,8 @@ class ConfigStoreSpec extends AnyFunSuite with SparkSpec {
     } finally {
       daemon.stop()
       prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+        case Some(p) => spark.conf.set(key, p)
+        case None => spark.conf.unset(key)
       }
     }
   }

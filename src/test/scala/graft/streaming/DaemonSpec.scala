@@ -51,6 +51,45 @@ class DaemonSpec extends AnyFunSuite with SparkSpec {
     } finally daemon.stop()
   }
 
+  test("one steady parquet tick with no compaction due runs 5 Spark jobs") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_daemon_jobs").toString
+    val channels = Seq((1L, 4, 0L, 100), (2L, 4, 0L, 100))
+      .toDF("id", "format_code", "conversion_id", "history_len")
+    val daemon = new Daemon(
+      spark, channels, Seq.empty,
+      Map("channels" -> "1@5,2@17", "registers" -> "4",
+        "startEpochSec" -> "0", "periodSec" -> "1", "maxTicks" -> "3"),
+      dir, pulseSec = 3600, truncIntervalSec = 3600)
+    // (query id, batch id) of every job; the heartbeat stream's batches
+    // carry their own query id
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).foreach(p => jobs.add(
+          (p.getProperty("sql.streaming.queryId"), p.getProperty("streaming.sql.batchId"))))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    daemon.start()
+    try {
+      daemon.ingest.processAllAvailable()
+      // listener delivery is async — poll until the count stops moving
+      var last = -1; var stable = 0
+      while (stable < 3) {
+        Thread.sleep(100)
+        if (jobs.size == last) stable += 1 else { stable = 0; last = jobs.size }
+      }
+      // batch 2 is the third tick: the status table exists and no
+      // retention is due, so this is the tick's source read, fact write
+      // and status merge alone
+      val n = jobs.toArray.count(_ == ((daemon.ingest.id.toString, "2")))
+      assert(n == 5, s"a steady parquet tick ran $n Spark jobs")
+    } finally {
+      daemon.stop()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
   test("in-loop retention: compact-before-persist runs every trigger without losing batches") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_daemon_trunc").toString
@@ -123,6 +162,31 @@ class DaemonSpec extends AnyFunSuite with SparkSpec {
       }
       assert(staged != null)
     } finally daemon.stop()
+  }
+
+  test("backfill refuses a JDBC-sink daemon before it starts a query") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_daemon_jdbc_bf").toString
+    val url = "jdbc:derby:memory:graftdaemonbf;create=true"
+    val channels = Seq((1L, 4, 0L, 100)).toDF("id", "format_code", "conversion_id", "history_len")
+    val daemon = new Daemon(
+      spark, channels, Seq.empty,
+      Map("channels" -> "1@5", "registers" -> "4",
+        "startEpochSec" -> "0", "periodSec" -> "1", "maxTicks" -> "2"),
+      dir, pulseSec = 3600, truncIntervalSec = 3600,
+      jdbcFactSink = Some((url, "bf_fact")))
+    daemon.start()
+    try daemon.ingest.processAllAvailable() finally daemon.stop()
+    assert(Ingest.readFactJdbc(spark, url, "bf_fact").count() == 2)
+    // a backfill's batch ids restart at 0, and the ledger already holds
+    // the live stream's batch 0: it would land nothing
+    val rawDir = s"$dir/raw"
+    Seq((1L, new java.sql.Timestamp(100000L), Seq(9, 0, 0, 0), 0))
+      .toDF("channel_id", "ts", "registers", "status").write.parquet(rawDir)
+    val e = intercept[IllegalArgumentException](daemon.backfill(rawDir))
+    assert(e.getMessage.contains("parquet fact sink"))
+    assert(!new java.io.File(s"$dir/ckpt-bf").exists(), "backfill started a query")
+    assert(Ingest.readFactJdbc(spark, url, "bf_fact").count() == 2)
   }
 
   test("JDBC soak: kill + restart mid-stream lands the exact no-kill fact set (Derby)") {

@@ -1,8 +1,6 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.streaming.Ingest.RegisterReading
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -24,24 +22,32 @@ class IngestSpec extends AnyFunSuite with SparkSpec {
   }
   private val convs = Seq(1L -> "Value = x * 10")
 
+  /** Land raw readings as parquet, in the modbus-sim source's schema. */
+  private def landRaw(rawDir: String, rows: (Long, java.sql.Timestamp, Seq[Int], Int)*): Unit = {
+    import spark.implicits._
+    rows.toDF("channel_id", "ts", "registers", "status")
+      .write.mode("append").parquet(rawDir)
+  }
+
+  /** A parquet-sink daemon for [[Daemon.backfill]] runs: no live source,
+    * no retention due. */
+  private def backfillDaemon(dir: String) =
+    new Daemon(spark, channelDim, convs, Map.empty, dir, truncIntervalSec = 3600)
+
   test("full pipeline: decode, convert, append, upsert, compact, flush") {
     import spark.implicits._
-    implicit val ctx = spark.sqlContext
     val dir = Files.createTempDirectory("graft_ingest").toString
-    val (factDir, statusDir, ckpt) = (s"$dir/fact", s"$dir/status", s"$dir/ckpt")
+    val (rawDir, factDir, statusDir) = (s"$dir/raw", s"$dir/fact", s"$dir/status")
 
-    val mem = MemoryStream[RegisterReading]
-    val q = Ingest.start(mem.toDF(), channelDim, convs, factDir, statusDir, ckpt)
-    try {
-      mem.addData(
-        RegisterReading(1L, ts(10), Seq(5, 0, 0, 0), 0),        // uint16 5 -> x10 = 50
-        RegisterReading(2L, ts(10), Seq(0x0000, 0x3FC0), 0),    // float 1.5
-        RegisterReading(1L, ts(11), Seq(7, 0, 0, 0), -1))       // failed read: dropped
-      q.processAllAvailable()
-      mem.addData(
-        RegisterReading(1L, ts(20), Seq(9, 0, 0, 0), 0))        // second sample ch1 -> 90
-      q.processAllAvailable()
-    } finally q.stop()
+    // two micro-batches through the daemon's tick, one per backfill run
+    landRaw(rawDir,
+      (1L, ts(10), Seq(5, 0, 0, 0), 0),        // uint16 5 -> x10 = 50
+      (2L, ts(10), Seq(0x0000, 0x3FC0), 0),    // float 1.5
+      (1L, ts(11), Seq(7, 0, 0, 0), -1))       // failed read: dropped
+    backfillDaemon(dir).backfill(rawDir)
+    landRaw(rawDir,
+      (1L, ts(20), Seq(9, 0, 0, 0), 0))        // second sample ch1 -> 90
+    backfillDaemon(dir).backfill(rawDir)
 
     val fact = Ingest.readFact(spark, factDir)
     val rows = fact.orderBy($"channel_id", $"ts").collect()
@@ -71,35 +77,29 @@ class IngestSpec extends AnyFunSuite with SparkSpec {
     assert(!new java.io.File(statusDir).exists())
   }
 
-  test("runBackfill drains landed raw data via AvailableNow; re-run is a no-op") {
+  test("backfill drains landed raw data via AvailableNow; re-run is a no-op") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_backfill").toString
-    val (rawDir, factDir, statusDir, ckpt) =
-      (s"$dir/raw", s"$dir/fact", s"$dir/status", s"$dir/ckpt")
+    val (rawDir, factDir) = (s"$dir/raw", s"$dir/fact")
 
-    // land raw readings as parquet (schema = the modbus-sim source's)
-    Seq(
+    landRaw(rawDir,
       (1L, ts(10), Seq(5, 0, 0, 0), 0),     // uint16 5 -> x10 = 50
       (2L, ts(10), Seq(0x0000, 0x3FC0), 0), // float 1.5
       (1L, ts(11), Seq(7, 0, 0, 0), -1))    // failed read: dropped
-      .toDF("channel_id", "ts", "registers", "status")
-      .write.parquet(rawDir)
 
-    Ingest.runBackfill(spark, rawDir, channelDim, convs, factDir, statusDir, ckpt)
+    backfillDaemon(dir).backfill(rawDir)
     def factRows() = Ingest.readFact(spark, factDir)
       .orderBy($"channel_id", $"ts").collect()
       .map(r => (r.getLong(0), r.getDecimal(2).toPlainString)).toSeq
     assert(factRows() == Seq((1L, "50.000000"), (2L, "1.500000")))
 
     // same checkpoint, unchanged raw dir -> nothing new lands
-    Ingest.runBackfill(spark, rawDir, channelDim, convs, factDir, statusDir, ckpt)
+    backfillDaemon(dir).backfill(rawDir)
     assert(factRows() == Seq((1L, "50.000000"), (2L, "1.500000")))
 
     // new raw file arrives -> only the delta is processed
-    Seq((1L, ts(20), Seq(9, 0, 0, 0), 0))
-      .toDF("channel_id", "ts", "registers", "status")
-      .write.mode("append").parquet(rawDir)
-    Ingest.runBackfill(spark, rawDir, channelDim, convs, factDir, statusDir, ckpt)
+    landRaw(rawDir, (1L, ts(20), Seq(9, 0, 0, 0), 0))
+    backfillDaemon(dir).backfill(rawDir)
     assert(factRows() == Seq((1L, "50.000000"), (1L, "90.000000"), (2L, "1.500000")))
   }
 

@@ -15,7 +15,7 @@ class RecoverySpec extends AnyFunSuite with SparkSpec {
   test("ingest resumes from checkpoint: no duplicates, no loss") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_rec").toString
-    val (in, factDir, statusDir, ckpt) = (s"$dir/in", s"$dir/fact", s"$dir/status", s"$dir/ckpt")
+    val (in, factDir) = (s"$dir/in", s"$dir/fact")
     def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
     val channels = Seq((1L, 4, 0L)).toDF("id", "format_code", "conversion_id")
 
@@ -23,15 +23,13 @@ class RecoverySpec extends AnyFunSuite with SparkSpec {
     Seq((1L, ts(10), Seq(5, 0, 0, 0), 0))
       .toDF("channel_id", "ts", "registers", "status")
       .write.mode("append").parquet(in)
-    val schema = spark.read.parquet(in).schema
 
-    def startQuery() = Ingest.start(
-      spark.readStream.schema(schema).parquet(in),
-      channels, Seq.empty, factDir, statusDir, ckpt)
+    // each run drains what is there and stops: the daemon's checkpoint
+    // under `dir` is all that carries over
+    def runOnce() = new Daemon(spark, channels, Seq.empty, Map.empty, dir,
+      truncIntervalSec = 3600).backfill(in)
 
-    val q1 = startQuery()
-    q1.processAllAvailable()
-    q1.stop() // "crash"
+    runOnce() // "crash" after the first run
 
     // more input lands while the query is down
     Seq((1L, ts(20), Seq(7, 0, 0, 0), 0), (1L, ts(30), Seq(9, 0, 0, 0), 0))
@@ -39,9 +37,7 @@ class RecoverySpec extends AnyFunSuite with SparkSpec {
       .write.mode("append").parquet(in)
 
     // restart from the same checkpoint
-    val q2 = startQuery()
-    q2.processAllAvailable()
-    q2.stop()
+    runOnce()
 
     val got = Ingest.readFact(spark, factDir)
       .select($"ts", $"value".cast("double"))
