@@ -20,12 +20,12 @@ import org.apache.spark.sql.SparkSession
   *    (count() would let Catalyst prune the very expressions a
   *    projection query exists to exercise) at zero disk cost.
   *
-  * Round 7 adds the OUTLIER DEFENSE (same discipline as ScaleSmoke's
-  * tN_iso): even a fresh-session median is hostage to co-located load
-  * on the measuring box — round 6's driver run medianed
-  * dd_embed_cluster at 26.1 s where fresh-session re-measures say ~3 s,
-  * with the same inflation pattern on unrelated queries. So each query
-  * whose sweep median exceeds 3× its recorded fresh-session floor
+  * Round 7 adds the OUTLIER DEFENSE: even a fresh-session median is
+  * hostage to co-located load on the measuring box — round 6's driver
+  * run medianed dd_embed_cluster at 26.1 s where fresh-session
+  * re-measures say ~3 s, with the same inflation pattern on unrelated
+  * queries. So each query whose sweep median exceeds 3× its recorded
+  * fresh-session floor
   * (resources/graft/bench_floors.txt — the committed previous-round
   * local bench; floors clamped up to 0.3 s so sub-second jitter never
   * flags) is re-measured ALONE at the end of the sweep in one more

@@ -81,7 +81,7 @@ object Conversions {
         // null this program instead of crashing the whole query.
         org.apache.spark.sql.SparkSession.getActiveSession.foreach { sp =>
           val probe = parsed.transformUp {
-            case a: UnresolvedAttribute => ColumnBridge.expression(lit(0.0))
+            case _: UnresolvedAttribute => ColumnBridge.expression(lit(0.0))
           }
           sp.range(1).select(ColumnBridge.column(probe))
             .queryExecution.assertAnalyzed()

@@ -48,25 +48,24 @@ object Tables {
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
 
   /** THE session constructor for every measurement/CLI main (Bench,
-    * Verify, ScaleSmoke, DaqMain). Round 5's bench regression was this
-    * exact hygiene landing in one harness (ScaleSmoke) and missing
-    * another (Bench): a long measurement session accumulates shuffle /
-    * broadcast / localCheckpoint state that the ContextCleaner only
+    * Verify, DaqMain). Round 5's bench regression was this exact
+    * hygiene landing in one harness and missing another (Bench): a
+    * long measurement session accumulates shuffle / broadcast /
+    * localCheckpoint state that the ContextCleaner only
     * releases after a driver GC, and with a mostly-idle heap that GC
     * may never come (default periodicGC is 30 min) — numbers then
     * degrade progressively (measured: dd_cluster 3.9 s → 26 s → 106 s
     * across warm repeats). Pinning `spark.cleaner.periodicGC.interval`
-    * short bounds the accumulation; harnesses additionally build a
-    * FRESH session per sweep (ScaleSmoke) or per query (Bench) so no
-    * protocol fix can ever land in one main and miss the others.
+    * short bounds the accumulation; Bench additionally builds a FRESH
+    * session per query, and no protocol fix can land in one main and
+    * miss the others.
     *
     * PROTOCOL NOTE (round 6 change): the default core count is 32
     * (`SPARK_GRAFT_CPUS` overrides). Pre-r06 Bench/Verify defaulted to
     * local[4]/shuffle=4, so BENCH artifacts before r06 are not
-    * comparable to later ones on the same default invocation; PlanDump
-    * and Profile deliberately keep 4 at their call sites for stable
-    * plan shapes. On machines with fewer cores set SPARK_GRAFT_CPUS
-    * explicitly — local[32] oversubscribes a small box. */
+    * comparable to later ones on the same default invocation. On
+    * machines with fewer cores set SPARK_GRAFT_CPUS explicitly —
+    * local[32] oversubscribes a small box. */
   def buildLocalSession(
       cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession = {
     val spark = withSessionDefaults(SparkSession.builder()

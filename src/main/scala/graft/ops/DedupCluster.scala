@@ -437,8 +437,8 @@ trait DedupClusterPart { this: Dedup.type =>
         // content-homogeneous, so rep eligibility decides) is
         // dominated by that minimum outright. Duplicate-saturated
         // corpora (the 100 TB reality) then cost the pairwise stage
-        // O(unique contents), not O(docs): ScaleSmoke's 20x-saturated
-        // 100k corpus dropped 342s -> seconds with the identical
+        // O(unique contents), not O(docs): a 20x-saturated 100k
+        // corpus dropped 342s -> seconds with the identical
         // survivor set. Shingle-less docs (< 3 tokens) never enter
         // postings, can't be dominated, and pass through.
         collapseApplySurvivors(table(s, d, "documents"), "doc_id",

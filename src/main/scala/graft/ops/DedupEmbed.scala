@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.QueryDef
 import graft.model.Tables.table
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -625,7 +625,7 @@ trait DedupEmbedPart { this: Dedup.type =>
         // rep's self-cosine (dot(v,v)/(norm*norm) — ~1.0 up to the
         // sqrt rounding both engines share), gated by the same
         // threshold. Candidate sets match the uncollapsed form exactly
-        // (twins collide in ALL bands); ScaleSmoke's 20x-saturated 40k
+        // (twins collide in ALL bands); a 20x-saturated set of 40k
         // vectors dropped 146s -> seconds with the quadratic left only
         // in the true output pairs.
         // the group key is a codegen'd BINARY fingerprint of the

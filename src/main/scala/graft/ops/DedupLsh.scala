@@ -3,7 +3,6 @@ package graft.ops
 import graft.QueryDef
 import graft.model.Tables.table
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The MinHash-LSH family of [[Dedup]] — signatures, banding,
@@ -265,11 +264,6 @@ trait DedupLshPart { this: Dedup.type =>
     docs.join(contaminated, Seq(idCol), "left_anti")
   }
 
-  /** Shared oracle CTE chain replaying [[minhashNearDups]] in DuckDB
-    * up to the verified (id_a, id_b, sim) pair set; consumers append
-    * their own threshold filter / anti-join. */
-  private lazy val minhashOracleCtes: String = minhashOracleCtesFrom("documents")
-
   /** One side of the minhash pipeline as prefixed CTEs
     * (`<p>t`/`<p>ne`/`<p>xb`/`<p>sig`/`<p>bands`) over `docsRel` — the
     * building block both the symmetric ([[minhashOracleCtesFrom]]) and
@@ -348,7 +342,9 @@ trait DedupLshPart { this: Dedup.type =>
         ORDER BY doc_id"""
   }
 
-  /** [[minhashOracleCtes]] with the doc source parameterized —
+  /** Shared oracle CTE chain replaying [[minhashNearDups]] in DuckDB
+    * up to the verified (id_a, id_b, sim) pair set over `docsRel`;
+    * consumers append their own threshold filter / anti-join.
     * dd_apply_lsh feeds exact-content group representatives instead of
     * the full corpus. */
   private[graft] def minhashOracleCtesFrom(docsRel: String): String =

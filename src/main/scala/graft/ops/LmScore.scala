@@ -82,28 +82,7 @@ object LmScore {
       .withColumn("avg_bits", $"sum_bits".cast("double") / $"n_bigrams")
   }
 
-  /** Append `avg_bits` to every row of `scored` (which must carry a
-    * `doc_id` column) under a bigram add-one LM trained on `corpus` —
-    * the BATCH (keyed-join) form of the gate
-    * [[graft.streaming.LmServe.withLmScoreColumn]] applies with a
-    * broadcast model: counts come from the RAW corpus, scoring runs
-    * over the (possibly transformed) `scored` text, and OOV n-grams —
-    * tokens the training side never saw, e.g. redaction-minted
-    * markers — take `coalesce(c, 0)` via LEFT joins, exactly the
-    * `getOrDefault(_, 0)` the broadcast scorer computes. Rows with
-    * fewer than two tokens are dropped (inner join — no evidence;
-    * the pipeline's length gate admits none).
-    *
-    * Scale shape: both count tables are map-side-combined hash
-    * aggregates over the leased raw tokenize pass; scoring is keyed
-    * equi-joins (model-table-sized, never broadcast-forced) plus the
-    * 1-row vocab scalar on a broadcast cross join. */
-  def withLmScoreAgainst(
-      scored: DataFrame, text: Column,
-      corpus: DataFrame, corpusText: Column): DataFrame =
-    scoreAgainst(scored, text, rawLmModel(corpus, corpusText))
-
-  /** The leased raw-corpus model tables [[withLmScoreAgainst]] scores
+  /** The leased raw-corpus model tables [[scoreAgainst]] scores
     * against — the tokenize pass and the unigram table materialize
     * eagerly here ([[Checkpoints.lease]]); the bigram count table is
     * cheap plan algebra over the leased tokens and rides the scoring
@@ -125,8 +104,22 @@ object LmScore {
     RawLmModel(rawToks, uni)
   }
 
-  /** The scoring half of [[withLmScoreAgainst]] over a pre-built
-    * [[RawLmModel]] — identical plan, identical rows. */
+  /** Append `avg_bits` to every row of `scored` (which must carry a
+    * `doc_id` column) under the bigram add-one LM `model` built by
+    * [[rawLmModel]] — the BATCH (keyed-join) form of the gate
+    * [[graft.streaming.LmServe.withLmScoreColumn]] applies with a
+    * broadcast model: counts come from the RAW corpus, scoring runs
+    * over the (possibly transformed) `scored` text, and OOV n-grams —
+    * tokens the training side never saw, e.g. redaction-minted
+    * markers — take `coalesce(c, 0)` via LEFT joins, exactly the
+    * `getOrDefault(_, 0)` the broadcast scorer computes. Rows with
+    * fewer than two tokens are dropped (inner join — no evidence;
+    * the pipeline's length gate admits none).
+    *
+    * Scale shape: both count tables are map-side-combined hash
+    * aggregates over the leased raw tokenize pass; scoring is keyed
+    * equi-joins (model-table-sized, never broadcast-forced) plus the
+    * 1-row vocab scalar on a broadcast cross join. */
   private[graft] def scoreAgainst(
       scored: DataFrame, text: Column, model: RawLmModel): DataFrame = {
     import scored.sparkSession.implicits._
@@ -154,7 +147,7 @@ object LmScore {
     scored.join(lm, Seq("doc_id"))
   }
 
-  /** DuckDB replay of [[withLmScoreAgainst]]: CTEs `{p}rt` (raw
+  /** DuckDB replay of [[scoreAgainst]] over [[rawLmModel]]: CTEs `{p}rt` (raw
     * tokens), `{p}uni`/`{p}v`/`{p}cnt` (the model), `{p}sbg`/`{p}sc`/
     * `{p}k` (scoring) and `{p}lm` = (doc_id, avg_bits). `scoredRel`
     * must expose (doc_id, text); `rawRel` is the training corpus
@@ -212,7 +205,7 @@ object LmScore {
     * divisions.
     *
     * Scale shape: ONE tokenize pass leased and fanned out (the
-    * [[Dsir]] move — two [[withLmScoreAgainst]] calls would lease the
+    * [[Dsir]] move — two [[rawLmModel]] builds would lease the
     * corpus twice and break the lease-lifetime contract); both models
     * come from the SAME count tables (pool count + target-slice count
     * per n-gram, map-side combined), scoring is one equi-join per

@@ -124,8 +124,7 @@ object Pipeline {
     // whose cost hides entirely inside the model build's wall-clock,
     // and which the pipe_clean lease below then reads back instead of
     // re-running the redact+gate kernels. Value-identical: a lease
-    // returns the same rows, and scoreAgainst ∘ rawLmModel is exactly
-    // withLmScoreAgainst.
+    // returns the same rows.
     val (lmModel, gatedL) = Par.join2(
       LmScore.rawLmModel(docs, $"text"),
       Checkpoints.lease("pipe_gated", gated))

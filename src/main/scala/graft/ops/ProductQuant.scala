@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.QueryDef
 import graft.model.Tables.table
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -178,12 +178,8 @@ object ProductQuant {
       emb: DataFrame, assignCodes: DataFrame => DataFrame): DataFrame =
     Checkpoints.lease("pq", pqReconPlanWith(emb, assignCodes))
 
-  /** The UNLEASED [[pqRecon]] plan (training + serving codebook +
-    * reconstruction assembly) — exposed for the committed build-plan
-    * evidence ([[graft.tools.TrainPlanDump]]). */
-  private[graft] def pqReconPlan(emb: DataFrame): DataFrame =
-    pqReconPlanWith(emb, pqCodes)
-
+  /** The UNLEASED [[pqRecon]] plan: training, serving codebook and
+    * reconstruction assembly. */
   private def pqReconPlanWith(
       emb: DataFrame, assignCodes: DataFrame => DataFrame): DataFrame = {
     val codes = assignCodes(emb)

@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.QueryDef
 import graft.model.Tables.table
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType

@@ -302,8 +302,7 @@ object Similarity {
     kmeansAssigned(emb, nlist, iters).select(col("vec_id"), col("cell"))
 
   /** The corpus WITH its trained cell — every `emb` column plus
-    * `cell` — the frame the IVF-family index builds lease (also the
-    * build-plan evidence [[graft.tools.TrainPlanDump]] dumps). The
+    * `cell` — the frame the IVF-family index builds lease. The
     * assignment is the broadcast in-row argmax against the trained
     * centroid row, NEVER a corpus-wide vec_id join: callers
     * historically wrote `emb.join(kmeansCells(emb'), "vec_id")`,

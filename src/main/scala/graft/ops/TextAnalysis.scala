@@ -73,9 +73,6 @@ object TextAnalysis {
       (lit(1.0) - punctRatio(text)) * lit(0.3) +
       least(stopwordRatio(toks, "en") * lit(4.0), lit(1.0)) * lit(0.3)
 
-  /** Scalar convenience for tiny inputs/specs. */
-  def qualityScore(text: Column): Column = qualityScoreOf(text, tokens(text))
-
   /** DuckDB twin of [[qualityScoreOf]] for oracle builders: `text` /
     * `toks` are SQL expressions for the raw text and its whitespace
     * token list. The double is bit-identical cross-engine (pinned by
@@ -108,22 +105,6 @@ object TextAnalysis {
       .drop(tk +: langs.map(l => s"__s_$l"): _*)
   }
 
-  /** Scalar convenience for tiny inputs/specs — bulk callers use
-    * [[withLangId]]. */
-  def langId(text: Column): Column = {
-    val toks = tokens(text)
-    val score: Map[String, Column] =
-      stopwords.map { case (l, ws) => l -> stopwordHits(toks, ws) }
-    val langs = stopwords.keys.toSeq.sorted
-    val best = greatest(langs.map(score): _*)
-    langs.foldRight(lit("und")) { (l, acc) =>
-      when(score(l) === best && best > 0, lit(l)).otherwise(acc)
-    }
-  }
-
-  /** Content-hash fingerprint of the lowercased text. */
-  def docHash(text: Column): Column = md5(lower(text))
-
   /** Rolling-hash document fingerprint over an ALREADY-BOUND lowercased
     * text column: the minimum scrambled poly-31 rolling hash over all
     * 8-char shingles (a 1-hash winnowing sketch — see
@@ -132,11 +113,6 @@ object TextAnalysis {
     * the full MD5 per position the first implementation paid. */
   def shingleFingerprintOf(t: Column, k: Int = 8): Column =
     graft.functions.Fingerprint.shingleMinRoll(t, k)
-
-  /** Scalar convenience for tiny inputs/specs — bulk callers bind
-    * lower(text) to a column first (see [[shingleFingerprintOf]]). */
-  def shingleFingerprint(text: Column, k: Int = 8): Column =
-    shingleFingerprintOf(lower(text), k)
 
   /** Global token offsets + fixed-budget shard assignment — the
     * "where does each document land in the training shards" step a

@@ -51,8 +51,8 @@ case class BatchAssigned(
   *    length-homogeneous (the padding bound is unchanged — band
   *    membership still decides), and only cross-shard batch-number
   *    comparability is given up. `w_batch_bylen_sharded` is that form,
-  *    oracle-replayed per (band, shard); the ScaleSmoke `batchshard`
-  *    mode measures the ceiling and the relief.
+  *    oracle-replayed per (band, shard); SCALE100BATCHSHARD_r17.json
+  *    records the ceiling and the relief.
   *  - MEMORY, batch-replay form only: determinism requires sorting
   *    each key's group by doc_id, and `flatMapGroupsWithState` hands
   *    the group as an iterator that must be drained to sort — so one
@@ -146,7 +146,7 @@ object Batching {
     // are (band, hash-shard-of-doc_id), numbering is exact per key —
     // the throughput form a deployment switches to when a band's
     // serial numbering becomes the ceiling (see the object doc; the
-    // ScaleSmoke `batchshard` artifact measures both forms). The
+    // SCALE100BATCHSHARD_r17.json artifact measures both forms). The
     // oracle replays the per-(band, shard) numbering with one window
     // over the portable-hash shard assignment.
     QueryDef(

@@ -30,12 +30,13 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * boundary, checkpoints make the restart resume exactly where the
   * drain left off.
   *
-  * Deployment note (100 TB): stateful stages (Cadence's
-  * flatMapGroupsWithState, dropDuplicatesWithinWatermark) default to
-  * the in-memory HDFS-backed state store; a large-key-space cluster
-  * deployment sets `spark.sql.streaming.stateStore.providerClass` to
-  * the RocksDB provider at session build so per-executor state spills
-  * to local disk instead of heap — no operator code changes.
+  * Deployment note (100 TB): the daemon's one stateful stage is the
+  * optional duplicate guard (`dedupeLateness`, a
+  * dropDuplicatesWithinWatermark). Its state defaults to the in-memory
+  * HDFS-backed state store; a large-key-space cluster deployment sets
+  * `spark.sql.streaming.stateStore.providerClass` to the RocksDB
+  * provider at session build so per-executor state spills to local
+  * disk instead of heap — no operator code changes.
   */
 class Daemon(
     spark: SparkSession,

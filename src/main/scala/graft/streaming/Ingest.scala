@@ -36,14 +36,6 @@ import scala.jdk.CollectionConverters._
   */
 object Ingest {
 
-  /** One raw acquisition: the wire-format words read from a device
-    * register block (reference buscommon.ReadResponse + ChannelState). */
-  case class RegisterReading(
-      channel_id: Long,
-      ts: java.sql.Timestamp,
-      registers: Seq[Int],
-      status: Int) // 0 ok, -1 read error (bus.py:94-105)
-
   /** D3 + D4 as one declarative transform: join the broadcast channel
     * dimension (format_code, conversion_id — db_model.py:9-28), decode
     * registers, apply the compiled conversion, cast to the fact
@@ -217,27 +209,6 @@ object Ingest {
   def readFact(spark: SparkSession, factDir: String): DataFrame =
     spark.read.schema(factSchema).parquet(factDir).drop("batch")
 
-  /** D6's fact append into a JDBC store with the same effective
-    * exactly-once the parquet path gets from batch-keyed directory
-    * overwrite ([[persistBatch]]). A JDBC append can't overwrite, so
-    * replay safety comes from a two-step protocol against a batch
-    * LEDGER table (`<table>_batches`, created on first use):
-    *
-    *  1. ledger already holds `batchId` → the batch committed; the
-    *     replay is a NO-OP;
-    *  2. otherwise scrub rows tagged `batchId` (a crashed attempt that
-    *     died between data append and ledger insert left partials),
-    *     append the batch tagged with a `batch_id` column, and insert
-    *     the ledger row LAST — the commit marker.
-    *
-    * Every crash point replays to the same final state: before the
-    * append (clean retry), mid-append (scrub removes partials), after
-    * the append but before the marker (scrub + re-append), after the
-    * marker (no-op). The ledger's PRIMARY KEY makes two concurrent
-    * writers of the same batch fail loudly rather than double-commit.
-    * The tag column mirrors the parquet path's `batch=bN` partition;
-    * [[readFactJdbc]] strips it. Reference persist path:
-    * daq-3i.py:262-292 (row-at-a-time ORM inserts, at-least-once). */
   private def withJdbc[A](url: String)(f: java.sql.Connection => A): A = {
     val c = java.sql.DriverManager.getConnection(url)
     try f(c) finally c.close()
@@ -299,6 +270,27 @@ object Ingest {
     try { ps.setLong(1, batchId); ps.executeUpdate(); () } finally ps.close()
   }
 
+  /** D6's fact append into a JDBC store with the same effective
+    * exactly-once the parquet path gets from batch-keyed directory
+    * overwrite ([[persistBatch]]). A JDBC append can't overwrite, so
+    * replay safety comes from a two-step protocol against a batch
+    * LEDGER table (`<table>_batches`, created on first use):
+    *
+    *  1. ledger already holds `batchId` → the batch committed; the
+    *     replay is a NO-OP;
+    *  2. otherwise scrub rows tagged `batchId` (a crashed attempt that
+    *     died between data append and ledger insert left partials),
+    *     append the batch tagged with a `batch_id` column, and insert
+    *     the ledger row LAST — the commit marker.
+    *
+    * Every crash point replays to the same final state: before the
+    * append (clean retry), mid-append (scrub removes partials), after
+    * the append but before the marker (scrub + re-append), after the
+    * marker (no-op). The ledger's PRIMARY KEY makes two concurrent
+    * writers of the same batch fail loudly rather than double-commit.
+    * The tag column mirrors the parquet path's `batch=bN` partition;
+    * [[readFactJdbc]] strips it. Reference persist path:
+    * daq-3i.py:262-292 (row-at-a-time ORM inserts, at-least-once). */
   def persistBatchJdbc(
       batch: DataFrame, batchId: Long, url: String, table: String): Unit = {
     val ledger = s"${table}_batches"

@@ -25,7 +25,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * Tick gate: the daemon's micro-batch tick is written once
   * (`Daemon.tick` over the sink chosen once per daemon), so each sink
   * step has exactly one call site in main source — a second
-  * `foreachBatch` around `persistBatch` would fork the tick. */
+  * `foreachBatch` around `persistBatch` would fork the tick.
+  *
+  * Mains gate: the only runnable mains in main source are the daemon
+  * (`DaqMain`) and the query suite's `Verify` and `Bench`. A one-off
+  * profiling main compiles into every build and rots; time queries
+  * with Bench's query filter instead. */
 class SourceGateSpec extends AnyFunSuite {
 
   private val mainRoot = new java.io.File("src/main/scala")
@@ -103,5 +108,25 @@ class SourceGateSpec extends AnyFunSuite {
       "a tick step must be called from the daemon's one tick only:\n" +
         offenders.map { case (s, at) => s"$s: ${at.size} call sites ${at.mkString(", ")}" }
           .mkString("\n"))
+  }
+
+  test("the only objects in main source with a main method are DaqMain, Verify and Bench") {
+    val objPat = """^\s*(?:private(?:\[\w+\])?\s+)?(?:case\s+)?object\s+(\w+)""".r
+    val mains = scalaFiles(mainRoot).flatMap { f =>
+      val lines = read(f).split("\n", -1)
+      def code(i: Int) = !isComment(lines(i).trim)
+      lines.indices.collect {
+        case i if lines(i).contains("def main(") && code(i) =>
+          // the object a main belongs to: the nearest `object` above it
+          val owner = (i to 0 by -1).iterator.filter(code)
+            .flatMap(j => objPat.findFirstMatchIn(lines(j)).map(_.group(1)))
+            .nextOption().getOrElse("?")
+          (owner, s"${f.getPath}:${i + 1}")
+      }
+    }
+    assert(mains.map(_._1).sorted == Seq("Bench", "DaqMain", "Verify"),
+      "main methods other than DaqMain's, Verify's and Bench's (time " +
+        "queries with Bench's query filter instead of a new main):\n" +
+        mains.map { case (o, at) => s"$o $at" }.mkString("\n"))
   }
 }

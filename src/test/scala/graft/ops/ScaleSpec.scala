@@ -9,6 +9,45 @@ import org.scalatest.funsuite.AnyFunSuite
   * either side). */
 class ScaleSpec extends AnyFunSuite with SparkSpec {
 
+  /** Key columns shifted per copy so each replica is FK-consistent and
+    * disjoint from the others. Dims (region, nation) are NOT amplified:
+    * at 100 TB dimensions stay broadcast-small while facts grow. */
+  private val shiftCols: Map[String, Seq[String]] = Map(
+    "customer" -> Seq("c_custkey"),
+    "supplier" -> Seq("s_suppkey"),
+    "part" -> Seq("p_partkey"),
+    "orders" -> Seq("o_orderkey", "o_custkey"),
+    "lineitem" -> Seq("l_orderkey", "l_partkey", "l_suppkey"),
+    "events" -> Seq("event_id", "user_id"),
+    "documents" -> Seq("doc_id"),
+    "embeddings" -> Seq("vec_id"))
+
+  /** Amplify the whole database into `outDir`: `copies` id-shifted,
+    * FK-consistent replicas of every fact table; dims copied verbatim.
+    * Raw parquet in/out (no `table()` ts normalization) so the
+    * amplified dir is schema-identical to the driver's. Documents keep
+    * their text across copies, so the corpus is duplicate-saturated. */
+  private def amplifyDatabase(sfDir: String, outDir: String, copies: Int): Unit = {
+    import spark.implicits._
+    val off = 1000000000L
+    graft.model.Tables.driverTables.foreach { t =>
+      val df = spark.read.parquet(s"$sfDir/$t.parquet")
+      val out = shiftCols.get(t) match {
+        case None => df // broadcast dim: unchanged
+        case Some(keys) =>
+          df.crossJoin(spark.range(copies).select($"id".as("__copy")))
+            .select(df.schema.fields.toSeq.map { f =>
+              if (keys.contains(f.name))
+                (col(f.name) + $"__copy" * lit(off)).cast(f.dataType).as(f.name)
+              else col(f.name)
+            }: _*)
+      }
+      // fact replicas across many files, as a large corpus arrives
+      val parts = if (shiftCols.contains(t)) 32 else 1
+      out.repartition(parts).write.mode("overwrite").parquet(s"$outDir/$t.parquet")
+    }
+  }
+
   test("saltedAgg == direct groupBy on a skewed distribution") {
     import spark.implicits._
     // hot key: 90% of rows on one key, all with the SAME value (the
@@ -64,7 +103,7 @@ class ScaleSpec extends AnyFunSuite with SparkSpec {
     // copy must be a disjoint, self-consistent replica
     val sf = "/root/testdata/sf0.001"
     val out = java.nio.file.Files.createTempDirectory("graft_ampspec").toString
-    graft.tools.ScaleSmoke.amplifyDatabase(spark, sf, out, copies = 3)
+    amplifyDatabase(sf, out, copies = 3)
     def base(t: String) = spark.read.parquet(s"$sf/$t.parquet")
     def amp(t: String) = spark.read.parquet(s"$out/$t.parquet")
 
