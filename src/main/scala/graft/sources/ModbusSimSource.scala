@@ -13,11 +13,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import java.util
 
 /** DataSource V2 streaming source for a fleet of Modbus-TCP devices —
-  * the reference's acquisition layer (D1/D2, modbus.py:37-56) with two
-  * reader modes behind one plan shape:
+  * the reference's acquisition layer (D1/D2, modbus.py:37-56): one
+  * read plan and one reader, in front of one of two devices:
   *
   *  - `mode=sim` (default, short name `modbus-sim`): an in-process
-  *    generator replaying the reference's device simulator fixture
+  *    device replaying the reference's device simulator fixture
   *    (modbus_server.py: holding register hr[addr] == addr, which
   *    makes `UINT16 @ address A -> value A` the golden end-to-end
   *    check, FIXTURES.md §1);
@@ -37,24 +37,25 @@ import java.util
   *    micro-batch regenerates the same keys — the idempotent sink
   *    depends on it (a wall-clock ts would fork the key space on every
   *    replay);
-  *  - the read plan is made once per stream, on the driver. In tcp
-  *    mode each unit's channels are sorted by address and cut into
-  *    blocks of at most 125 touching or overlapping registers
-  *    ([[ModbusSimSource.blocks]]); the blocks are cut into at most
-  *    `numPartitions` contiguous runs, one per input partition. Each
-  *    PartitionReader owns ONE connection for the batch and sends one
-  *    request per block (SURVEY.md §3.5 network boundary — the driver
-  *    never touches a socket). A device exception on a block falls
-  *    back to one read per channel of that block, so a bad address
-  *    fails only its own channel. In sim mode the channels are dealt
-  *    round-robin to `numPartitions` partitions.
+  *  - the read plan is made once per stream, on the driver
+  *    ([[ModbusSimSource.plan]]): each unit's channels are sorted by
+  *    address and cut into blocks of at most 125 touching or
+  *    overlapping registers ([[ModbusSimSource.blocks]]), and the
+  *    blocks are cut into at most `numPartitions` contiguous runs, one
+  *    per input partition. Each PartitionReader reads its device once
+  *    per block and slices the words back into one row per channel; in
+  *    tcp mode it owns ONE connection for the batch (SURVEY.md §3.5
+  *    network boundary — the driver never touches a socket), and a
+  *    device exception on a block falls back to one read per channel
+  *    of that block, so a bad address fails only its own channel.
   *
   * Options: `channels` = comma list of `id@address[@count[@unit]]`
   * (count defaults to `registers`, unit to `unitId`); `registers` =
   * default words per read (default 4); `unitId` (default 1);
-  * `startEpochSec`; `periodSec` (tick width); `numPartitions`;
-  * `maxTicks`; tcp mode adds `host`, `port`, `timeoutMs` (default
-  * 1000), `funcCode` (must be 3 — the only implemented function,
+  * `startEpochSec`; `periodSec` (tick width, >= 1); `numPartitions`
+  * (>= 1); `maxTicks`; tcp mode adds `host`, `port` (1-65535),
+  * `timeoutMs` (default 1000, >= 1: 0 would wait forever),
+  * `funcCode` (must be 3 — the only implemented function,
   * modbus.py:48-49).
   */
 class ModbusSimSource extends TableProvider with DataSourceRegister {
@@ -126,10 +127,10 @@ object ModbusSimSource {
       }
     }
 
-  /** The tcp read plan: [[blocks]] cut into at most `numPartitions`
-    * contiguous runs of nearly equal block counts, so a block never
-    * spans two partitions and each partition's requests stay in
-    * address order. */
+  /** The read plan of both modes: [[blocks]] cut into at most
+    * `numPartitions` contiguous runs of nearly equal block counts, so a
+    * block never spans two partitions and each partition's requests
+    * stay in address order. */
   def plan(channels: Seq[Chan], numPartitions: Int): Seq[Seq[Block]] = {
     val bs = blocks(channels)
     val k = math.min(numPartitions, bs.size)
@@ -173,7 +174,7 @@ object ModbusSimSource {
     require(fn == 3, s"function code $fn not yet implemented (only 3)")
     if (mode == "tcp") require(options.containsKey("host") && options.containsKey("port"),
       "tcp mode requires host and port options")
-    Config(
+    val config = Config(
       chans,
       options.getLong("startEpochSec", 0L),
       options.getLong("periodSec", 1L),
@@ -183,6 +184,14 @@ object ModbusSimSource {
       options.getOrDefault("host", ""),
       options.getInt("port", 502),
       options.getInt("timeoutMs", 1000))
+    // values that would plan no partition, stamp ticks out of order or
+    // wait on a silent device forever (a 0 timeout is none to a socket)
+    require(config.numPartitions >= 1, s"numPartitions ${config.numPartitions} < 1")
+    require(config.periodSec >= 1, s"periodSec ${config.periodSec} < 1")
+    require(config.timeoutMs >= 1, s"timeoutMs ${config.timeoutMs} < 1")
+    if (mode == "tcp")
+      require(config.port >= 1 && config.port <= 0xFFFF, s"port ${config.port} not in 1-65535")
+    config
   }
 }
 
@@ -207,72 +216,46 @@ private case class TickOffset(tick: Long) extends Offset {
   override def json(): String = tick.toString
 }
 
+/** One tick per trigger: one device sweep per micro-batch, the
+  * reference's acquisition cadence. A positive maxTicks bounds the
+  * stream (lets processAllAvailable converge in tests and replay
+  * jobs); live mode leaves it unbounded.
+  *
+  * The stream keeps no state: its offsets are a pure function of the
+  * start offset Spark hands in. Spark's plain MicroBatchStream path
+  * calls latestOffset() without the restored offset, so this source
+  * implements SupportsAdmissionControl, whose latestOffset(start,
+  * limit) receives the checkpointed start. A restarted stream
+  * therefore resumes after its last committed tick and never re-plans
+  * a committed tick under a new batch id, which the batchId-keyed
+  * idempotent sink could not dedupe. */
 private class ModbusSimMicroBatchStream(config: ModbusSimSource.Config)
     extends MicroBatchStream with SupportsAdmissionControl {
-  // One tick per trigger — one device sweep per micro-batch, the
-  // reference's acquisition cadence. A positive maxTicks bounds the
-  // stream (lets processAllAvailable converge in tests and replay
-  // jobs); live mode leaves it unbounded.
-  //
-  // Restart safety: `tick` must never regress below the checkpointed
-  // offset, or committed ticks would be re-planned under NEW batch ids
-  // (which the batchId-keyed idempotent sink cannot dedupe). Spark's
-  // plain MicroBatchStream path calls latestOffset() WITHOUT handing
-  // back the restored offset, so this source implements
-  // SupportsAdmissionControl — that path passes the checkpointed start
-  // offset into latestOffset(start, limit) — and additionally
-  // re-learns the offset in deserializeOffset/planInputPartitions.
-  private var tick = 0L
-  private def observe(o: Long): Unit = synchronized { if (o > tick) tick = o }
-
   override def initialOffset(): Offset = TickOffset(0L)
   override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[TickOffset].tick
-    // reportLatestOffset/commit can run from other driver threads, so
-    // the advance shares observe()'s lock — no unsynchronized RMW
-    synchronized {
-      if (s > tick) tick = s
-      if (config.maxTicks <= 0L || tick < config.maxTicks) tick += 1
-      TickOffset(tick)
-    }
+    TickOffset(if (config.maxTicks <= 0L || s < config.maxTicks) s + 1 else s)
   }
-  override def reportLatestOffset(): Offset = synchronized { TickOffset(tick) }
   override def latestOffset(): Offset =
     throw new UnsupportedOperationException(
       "SupportsAdmissionControl source: latestOffset(start, limit) is used")
-  override def deserializeOffset(json: String): Offset = {
-    val o = json.toLong
-    observe(o)
-    TickOffset(o)
-  }
-  override def commit(end: Offset): Unit =
-    observe(end.asInstanceOf[TickOffset].tick)
+  override def deserializeOffset(json: String): Offset = TickOffset(json.toLong)
+  override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 
-  // Planned once per stream. tcp reads blocks (ModbusSimSource.plan);
-  // sim has no wire, so each channel is its own block and the channels
-  // keep their interleaved split: sim partitions and row order are
-  // those of a one-read-per-channel plan.
-  private val partitionBlocks: Seq[Seq[ModbusSimSource.Block]] =
-    if (config.mode == "tcp") ModbusSimSource.plan(config.channels, config.numPartitions)
-    else config.channels.zipWithIndex.groupBy(_._2 % config.numPartitions)
-      .toSeq.sortBy(_._1).map(_._2.map(c => ModbusSimSource.Block.of(c._1)))
-  // the blocks carry every channel a reader needs
+  // planned once per stream; the blocks carry every channel a reader needs
+  private val partitionBlocks = ModbusSimSource.plan(config.channels, config.numPartitions)
   private val taskConfig = config.copy(channels = Nil)
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val (s, e) = (start.asInstanceOf[TickOffset].tick, end.asInstanceOf[TickOffset].tick)
-    observe(e)
     partitionBlocks.map(bs => ModbusSimPartition(bs, s, e, taskConfig): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    (partition: InputPartition) => {
-      val p = partition.asInstanceOf[ModbusSimPartition]
-      if (p.config.mode == "tcp") new ModbusTcpPartitionReader(p)
-      else new ModbusSimPartitionReader(p)
-    }
+    (partition: InputPartition) =>
+      new ModbusPartitionReader(partition.asInstanceOf[ModbusSimPartition])
 }
 
 private case class ModbusSimPartition(
@@ -283,40 +266,26 @@ private case class ModbusSimPartition(
   def tsMicros(tick: Long): Long = (config.startEpochSec + tick * config.periodSec) * 1000000L
 }
 
-/** Generates one row per (tick, channel) for ticks in (start, end]
-  * from the in-process simulator ramp. */
-private class ModbusSimPartitionReader(p: ModbusSimPartition)
-    extends PartitionReader[InternalRow] {
-  private val rows: Iterator[InternalRow] = for {
-    t <- Iterator.range(p.startTick + 1, p.endTick + 1)
-    ch <- p.blocks.iterator.flatMap(_.chans)
-  } yield {
-    // simulated device block: hr[a] == a (modbus_server.py:92)
-    val regs = Array.tabulate(ch.count)(i => (ch.addr + i) & 0xFFFF)
-    InternalRow(ch.id, p.tsMicros(t), ArrayData.toArrayData(regs), 0)
-  }
-  private var current: InternalRow = _
-  override def next(): Boolean = {
-    if (rows.hasNext) { current = rows.next(); true } else false
-  }
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
-}
-
-/** Live mode: one MBAP connection per partition per micro-batch,
-  * amortized over every (tick, block) read this partition owns — the
-  * network boundary lives inside the reader, never on the driver. Each
-  * block is one request, sliced back into one row per channel.
+/** Reads ticks (start, end] of one partition's blocks. Each
+  * (tick, block) is one read of the device, sliced back into one row
+  * per channel. The device is `readBlock(unit, address, count)`: in
+  * tcp mode one MBAP connection per partition per micro-batch, so the
+  * network boundary lives inside the reader, never on the driver; in
+  * sim mode the simulator ramp.
   *  - A device exception response keeps the connection (the device is
   *    alive and talking). On a block of several channels it may be one
   *    bad address, so that block's channels are read one by one and
   *    only a channel the device refuses fails (bus.py:94-100).
   *  - A transport failure or timeout makes every channel of the block a
   *    status=-1 row with no registers, and the next block reconnects. */
-private class ModbusTcpPartitionReader(p: ModbusSimPartition)
+private class ModbusPartitionReader(p: ModbusSimPartition)
     extends PartitionReader[InternalRow] {
-  private val client =
-    new ModbusTcpClient(p.config.host, p.config.port, p.config.timeoutMs)
+  private val client = Option.when(p.config.mode == "tcp")(
+    new ModbusTcpClient(p.config.host, p.config.port, p.config.timeoutMs))
+  // simulated device: hr[a] == a (modbus_server.py:92)
+  private val readBlock: (Int, Int, Int) => Array[Int] = client.fold(
+    (_: Int, addr: Int, count: Int) => Array.tabulate(count)(i => (addr + i) & 0xFFFF))(
+    _.readHoldingRegisters)
   private val emptyRegs = ArrayData.toArrayData(Array.empty[Int])
   private val rows: Iterator[InternalRow] = for {
     t <- Iterator.range(p.startTick + 1, p.endTick + 1)
@@ -326,7 +295,7 @@ private class ModbusTcpPartitionReader(p: ModbusSimPartition)
 
   private def read(b: ModbusSimSource.Block, tsMicros: Long): Seq[InternalRow] =
     try {
-      val words = client.readHoldingRegisters(b.unit, b.addr, b.count)
+      val words = readBlock(b.unit, b.addr, b.count)
       b.chans.map { ch =>
         val from = ch.addr - b.addr
         val regs = java.util.Arrays.copyOfRange(words, from, from + ch.count)
@@ -343,5 +312,5 @@ private class ModbusTcpPartitionReader(p: ModbusSimPartition)
     if (rows.hasNext) { current = rows.next(); true } else false
   }
   override def get(): InternalRow = current
-  override def close(): Unit = client.close()
+  override def close(): Unit = client.foreach(_.close())
 }

@@ -41,7 +41,7 @@ object ConfigStore {
 
   /** Everything [[Daemon]] needs, loaded from the config store. */
   case class DaemonConfig(
-      channels: DataFrame, // (id, format_code, conversion_id, history_len, ...)
+      channels: DataFrame, // local snapshot: (id, format_code, conversion_id, history_len, ...)
       conversions: Seq[(Long, String)],
       busSources: Seq[Map[String, String]]) // one source-options map per bus
 
@@ -87,15 +87,12 @@ object ConfigStore {
         "(only MODBUSTCP=1; the reference's silent bus1 fallthrough is not ported)")
 
     // channel dim for decode/convert/retention — enabled only, but for
-    // EVERY enabled bus (the stream union below carries all of them)
+    // EVERY enabled bus (the stream union below carries all of them).
+    // Read once: the source specs and the daemon's dim share its rows.
     val enabledBusIds = buses.map(_.getAs[Long]("id")).toSeq
-    val channels = tbl("channels")
-      .filter(col("enabled") && col("bus_id").isin(enabledBusIds: _*))
-
-    val chanRows = channels
-      .select(col("id"), col("bus_id"), col("device_id"), col("address"),
-        col("func_code"), col("format_code"), col("name"))
-      .collect()
+    val channels = Daemon.snapshot(tbl("channels")
+      .filter(col("enabled") && col("bus_id").isin(enabledBusIds: _*)))
+    val chanRows = channels.collect()
     val badFn = chanRows.filter(_.getAs[Int]("func_code") != 3)
     require(badFn.isEmpty,
       s"function code not yet implemented for channel(s): ${badFn.map(c =>

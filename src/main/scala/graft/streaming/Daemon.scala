@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import scala.jdk.CollectionConverters._
+
 /** The whole reference daemon as ONE Spark-native object — the
   * "switch from daq-3i" entry point. Reference topology
   * (daq-3i.py:218-231 load, :311-348 thread spawn, :350-374 drain):
@@ -29,6 +31,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * `stop()` is the SIGTERM drain: streams stop at a micro-batch
   * boundary, checkpoints make the restart resume exactly where the
   * drain left off.
+  *
+  * `channels` is collected once, when the daemon is constructed, and
+  * decode, retention and both sinks read that snapshot: no tick reads
+  * the store it came from. A config change therefore takes effect at
+  * restart, as with the reference's load at startup
+  * (daq-3i.py:218-231).
   *
   * Deployment note (100 TB): the daemon's one stateful stage is the
   * optional duplicate guard (`dedupeLateness`, a
@@ -66,6 +74,8 @@ class Daemon(
     // status table stays on statusDir in both modes.
     jdbcFactSink: Option[(String, String)] = None) {
 
+  private val dim = Daemon.snapshot(channels)
+
   val factDir = s"$dataDir/fact"
   val statusDir = s"$dataDir/status"
   private val ckptDir = s"$dataDir/ckpt"
@@ -83,18 +93,18 @@ class Daemon(
     case None => new Daemon.FactSink {
       def recover(): Unit = Ingest.recoverFactDir(spark, factDir)
       def retain(batchId: Long, prefix: String): Unit =
-        Daemon.compactBeforePersist(spark, factDir, channels, batchId, prefix)
+        Daemon.compactBeforePersist(spark, factDir, dim, batchId, prefix)
       def land(batch: DataFrame, batchId: Long, prefix: String): Unit =
         Ingest.persistBatch(batch, batchId, factDir, statusDir, prefix)
-      def compact(): Unit = Ingest.compactFact(spark, factDir, channels)
+      def compact(): Unit = Ingest.compactFact(spark, factDir, dim)
     }
     case Some((url, table)) => new Daemon.FactSink {
       def recover(): Unit = ()
       def retain(batchId: Long, prefix: String): Unit =
-        Daemon.compactBeforePersistJdbc(spark, url, table, channels, batchId)
+        Daemon.compactBeforePersistJdbc(spark, url, table, dim, batchId)
       def land(batch: DataFrame, batchId: Long, prefix: String): Unit =
         Ingest.landBatch(batch, statusDir)(Ingest.persistBatchJdbc(batch, batchId, url, table))
-      def compact(): Unit = Ingest.compactFactJdbc(spark, url, table, channels)
+      def compact(): Unit = Ingest.compactFactJdbc(spark, url, table, dim)
     }
   }
 
@@ -125,7 +135,7 @@ class Daemon(
   private def run(readings: DataFrame, ckpt: String, prefix: String, trigger: Trigger): StreamingQuery = {
     sink.recover()
     lastCompactMs = System.currentTimeMillis()
-    Ingest.decodeAndConvert(readings, channels, conversions).writeStream
+    Ingest.decodeAndConvert(readings, dim, conversions).writeStream
       .option("checkpointLocation", ckpt)
       .trigger(trigger)
       .foreachBatch(tick(prefix) _)
@@ -201,6 +211,11 @@ class Daemon(
 }
 
 object Daemon {
+
+  /** `df`'s rows, collected once, as a local relation: reading it runs
+    * no scan of the store `df` came from. */
+  def snapshot(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(df.collect().toSeq.asJava, df.schema)
 
   /** What a fact sink does for the daemon: startup recovery, retention
     * before a persist, the persist, and a final compaction. */

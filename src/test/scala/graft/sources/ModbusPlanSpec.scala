@@ -4,9 +4,10 @@ import graft.sources.ModbusSimSource.{Block, Chan, blocks, plan}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
 import scala.util.Random
 
-/** The tcp read plan as a pure function: which channels share one
+/** The read plan of both modes as a pure function: which channels share one
   * function-code-3 request, and how the requests are dealt to
   * partitions. */
 class ModbusPlanSpec extends AnyFunSuite {
@@ -74,5 +75,28 @@ class ModbusPlanSpec extends AnyFunSuite {
     for (bad <- Seq("1@65541", "1@-1", "1@5@0", "1@5@126", "1@65535@2", "1@5@1@256", "1@5@1@-1"))
       assert(intercept[IllegalArgumentException](parse(bad)).getMessage.contains("channel 1:"), bad)
     assert(parse("1@65535@1@255,2@0@125@0") == Seq(Chan(1, 65535, 1, 255), Chan(2, 0, 125, 0)))
+  }
+
+  test("parse refuses options that plan nothing, stamp ticks wrongly or never time out") {
+    def parse(opts: (String, String)*) =
+      ModbusSimSource.parse(new CaseInsensitiveStringMap(opts.toMap.asJava))
+    val tcp = Seq("mode" -> "tcp", "host" -> "127.0.0.1", "port" -> "502")
+    // numPartitions < 1 planned no partition: every tick silently empty
+    // (sim mode divided by it); periodSec < 1 stamped ticks with one ts
+    // or ran time backwards; timeoutMs 0 is no timeout to a socket, and
+    // a negative one threw inside the task
+    for ((k, v) <- Seq("numPartitions" -> "0", "numPartitions" -> "-1",
+        "periodSec" -> "0", "periodSec" -> "-5", "timeoutMs" -> "0", "timeoutMs" -> "-1")) {
+      assert(intercept[IllegalArgumentException](parse(k -> v)).getMessage.contains(k), s"$k=$v")
+      assert(intercept[IllegalArgumentException](parse(tcp :+ (k -> v): _*))
+        .getMessage.contains(k), s"tcp $k=$v")
+    }
+    for (port <- Seq("0", "-1", "65536"))
+      assert(intercept[IllegalArgumentException](parse(tcp :+ ("port" -> port): _*))
+        .getMessage.contains("port"), port)
+    val ok = parse(tcp ++ Seq("numPartitions" -> "1", "periodSec" -> "1",
+      "timeoutMs" -> "1", "port" -> "65535"): _*)
+    assert((ok.numPartitions, ok.periodSec, ok.timeoutMs, ok.port) == (1, 1L, 1, 65535))
+    assert(parse().numPartitions == 2 && parse().timeoutMs == 1000 && parse().periodSec == 1L)
   }
 }

@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The FIXTURES.md §1 golden check, end to end: the simulated device
@@ -85,6 +86,43 @@ class ModbusSimSourceSpec extends AnyFunSuite with SparkSpec {
       // registers are the simulator ramp: first word == address
       val regs = t.filter($"channel_id" === 3).select($"registers").head().getSeq[Int](0)
       assert(regs == Seq(2, 3, 4, 5))
+    } finally q.stop()
+  }
+
+  test("sim reads go through the block plan: partitions are its runs, ramp words per channel") {
+    import spark.implicits._
+    // touching (1, 2), overlapping (3, 4), gapped (5, 6) and another
+    // unit (7): four blocks of unit 1 and one of unit 2
+    val spec = "1@10@2,2@12@2,3@20@3,4@21@2,5@40@1,6@60@4,7@10@2@2"
+    val readings = spark.readStream
+      .format("modbus-sim")
+      .option("channels", spec)
+      .option("numPartitions", "2")
+      .option("maxTicks", "3")
+      .load()
+      .withColumn("pid", spark_partition_id())
+    val q = readings.writeStream
+      .format("memory").queryName("modbus_blocks").outputMode("append").start()
+    try {
+      q.processAllAvailable()
+      q.processAllAvailable()
+      val rows = spark.table("modbus_blocks")
+        .select($"channel_id", $"ts", $"registers", $"status", $"pid").collect()
+      val chans = ModbusSimSource.parse(
+        new CaseInsensitiveStringMap(java.util.Map.of("channels", spec))).channels
+      // every channel on every tick, with the golden ramp words hr[a] == a
+      val ticks = rows.map(_.getTimestamp(1).getTime).distinct.sorted.toSeq
+      assert(ticks == Seq(1000L, 2000L, 3000L))
+      assert(rows.length == chans.size * ticks.size)
+      assert(rows.forall(_.getInt(3) == 0))
+      val want = chans.map(c => c.id -> (c.addr until c.addr + c.count)).toMap
+      for (r <- rows) assert(r.getSeq[Int](2) == want(r.getLong(0)), r)
+      // the input partitions are exactly the plan's runs, and two are used
+      val runs = ModbusSimSource.plan(chans, 2).map(_.flatMap(_.chans.map(_.id)).toSet)
+      val byPid = rows.groupBy(_.getInt(4)).toSeq.sortBy(_._1)
+        .map(_._2.map(_.getLong(0)).toSet)
+      assert(runs.size == 2)
+      assert(byPid == runs, s"partitions $byPid, plan runs $runs")
     } finally q.stop()
   }
 }

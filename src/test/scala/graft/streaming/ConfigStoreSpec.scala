@@ -89,6 +89,67 @@ class ConfigStoreSpec extends AnyFunSuite with SparkSpec {
     } finally { s1.close(); s2.close() }
   }
 
+  test("the daemon lands from its channel snapshot: a rewritten config store is never read by a tick") {
+    import spark.implicits._
+    val loc = Files.createTempDirectory("graft_cfg_snap").toString
+    val dataDir = Files.createTempDirectory("graft_cfg_snap_run").toString
+    val s1 = new ModbusTestServer()
+    val s2 = new ModbusTestServer()
+    try {
+      seed(loc, s1.port, s2.port)
+      // no maxTicks: the stream ticks until stopped
+      val cfg = ConfigStore.load(spark, loc, Map("startEpochSec" -> "0", "periodSec" -> "1"))
+      val daemon = new Daemon(
+        spark, cfg.channels, cfg.conversions,
+        cfg.busSources.head, dataDir,
+        pulseSec = 3600, truncIntervalSec = 3600,
+        extraSources = cfg.busSources.tail)
+      daemon.start()
+      try {
+        val q = daemon.ingest
+        def awaitBatch(id: Long): Unit = {
+          val deadline = System.currentTimeMillis() + 60000
+          while (Option(q.lastProgress).forall(_.batchId < id)) {
+            q.exception.foreach(e => fail(s"the stream stopped before batch $id", e))
+            assert(System.currentTimeMillis() < deadline, s"batch $id not reached in 60 s")
+            Thread.sleep(20)
+          }
+        }
+        // the physical plan of the newest tick
+        def tickPlan(): String = {
+          val out = new java.io.ByteArrayOutputStream
+          Console.withOut(out)(q.explain())
+          out.toString
+        }
+        awaitBatch(0)
+        // rewrite the store under the running daemon: ch1 disabled, ch2
+        // another format and conversion, a new ch5
+        Seq(
+          (1L, "ch1", 1L, 1, 5, 1, Some(1L), 3, 4, false, "V", 100, "chan one"),
+          (2L, "ch2", 1L, 1, 17, 1, Some(1L), 3, 0, true, "V", 100, "chan two"),
+          (3L, "ch3", 2L, 7, 40, 1, None, 3, 0, true, "A", 100, "chan three"),
+          (5L, "ch5", 1L, 1, 30, 1, None, 3, 4, true, "V", 100, "chan five"))
+          .toDF("id", "name", "bus_id", "device_id", "address", "timing",
+            "conversion_id", "func_code", "format_code", "enabled", "eng_unit",
+            "history_len", "long_name")
+          .write.mode("overwrite").parquet(s"$loc/channels")
+        val rewrittenAt = q.lastProgress.batchId
+        awaitBatch(rewrittenAt + 2)
+        val plan = tickPlan()
+        assert(!plan.contains(loc), plan)
+        daemon.stop()
+        // batch b is tick b + 1, stamped b + 1 s: every tick after the
+        // rewrite landed ch1-ch3 from the snapshot, with the old decode
+        val fact = Ingest.readFact(spark, daemon.factDir)
+          .select($"channel_id", $"ts", $"value".cast("double")).collect()
+          .groupBy(_.getTimestamp(1).getTime / 1000)
+          .map { case (t, rs) => t -> rs.map(r => (r.getLong(0), r.getDouble(2))).sorted.toSeq }
+        for (t <- 1L to rewrittenAt + 3)
+          assert(fact.get(t).contains(Seq((1L, 11.0), (2L, 17.0), (3L, 40.0))), s"tick $t: ${fact.get(t)}")
+      } finally daemon.stop()
+    } finally { s1.close(); s2.close() }
+  }
+
   test("CREATE-TABLE catalog tables + SQL INSERTs drive the daemon end to end") {
     import spark.implicits._
     // the reference's own bring-up: CREATE-TABLE run mode (R13), rows
